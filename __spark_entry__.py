@@ -2593,7 +2593,7 @@ FROM o FULL OUTER JOIN i ON o.entity = i.entity
         "kg_pagerank": _pagerank_sql(),
         "corpus_skew_salts": f"""
 SELECT source, lang, COUNT(*) AS n_rows,
-       (COUNT(*) * 1000000) // SUM(COUNT(*)) OVER () AS share_ppm,
+       CAST((COUNT(*) * 1000000) // SUM(COUNT(*)) OVER () AS BIGINT) AS share_ppm,
        (COUNT(*) + {SKEW_TARGET_ROWS - 1}) // {SKEW_TARGET_ROWS} AS salt_buckets
 FROM documents GROUP BY source, lang
 """,

@@ -1,11 +1,14 @@
 """Benchmark harness: runs every implemented query at SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+compact JSON line last (well under 1,000 characters, so a log tail
+always holds all of it); the full per-query results go to
+``bench_full.json`` next to this script:
 
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "slowest": {...}, ...}
 
 Extra keys: docs_per_sec (flagship KG-extraction throughput, the north
-rule's unit), n_docs, cpus.
+rule's unit), n_docs, cpus, loadavg, the 10 slowest queries and the
+side file's path.
 
 Contention robustness (round-4, after the round-3 run of record was
 poisoned by external host load — 168 s recorded vs 97 s on a quiet
@@ -14,7 +17,8 @@ in one session, interleaved — repeat 2 re-runs every query after
 repeat 1 finishes, so a transient load spike can't poison a query's
 only sample. ``queries`` reports the per-query MIN across repeats (the
 least-contended sample; compute is deterministic, so min is the
-honest steady-state), ``repeats`` keeps every raw sample, and
+honest steady-state), ``repeats`` keeps every raw sample (both maps
+are in the side file), and
 ``loadavg_before``/``loadavg_after`` record /proc/loadavg so a judge
 can see the contention the numbers were taken under. ``value`` is the
 sum of per-query mins; ``wall_sec_all_repeats`` is the raw session
@@ -113,26 +117,25 @@ def main():
     total = round(sum(timings.values()), 3)
 
     docs_per_sec = round(n_docs / timings[flagship], 2) if timings.get(flagship) else None
-    print(
-        json.dumps(
-            {
-                "metric": "all_queries_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "n_docs": n_docs,
-                "cpus": cpus,
-                "flagship": flagship,
-                "docs_per_sec": docs_per_sec,
-                "n_repeats": n_repeats,
-                "repeats": repeats,
-                "wall_sec_all_repeats": wall,
-                "loadavg_before": load_before,
-                "loadavg_after": load_after,
-            }
-        )
-    )
+    summary = {
+        "metric": "all_queries_wall_sec",
+        "value": total,
+        "unit": "sec",
+        "sf": sf,
+        "n_docs": n_docs,
+        "cpus": cpus,
+        "flagship": flagship,
+        "docs_per_sec": docs_per_sec,
+        "n_repeats": n_repeats,
+        "wall_sec_all_repeats": wall,
+        "loadavg_before": load_before,
+        "loadavg_after": load_after,
+    }
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
+    with open(full_path, "w") as f:
+        json.dump({**summary, "queries": timings, "repeats": repeats}, f)
+    slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:10]
+    print(json.dumps({**summary, "slowest": dict(slowest), "full": full_path}))
     spark.stop()
 
 

@@ -4,18 +4,13 @@ Groups linked mentions into canonical entities (component id = the
 lexicographically smallest member) and rewrites triples to canonical
 ids. Net-new per the north rule (SURVEY.md §4.2.5).
 
-Algorithm: iterative minimum-label propagation over the match-edge
-graph as DataFrame self-joins:
-
-  label(u) ← min(label(u), min_{(u,v)∈E} label(v))
-
-repeated until a round changes no label. Entity-match graphs are
-low-diameter (near-clique clusters of coreferent mentions), so this
-converges in a handful of rounds; every round is one shuffle on the
-edge key. Lineage is truncated with localCheckpoint each round so the
-plan doesn't grow unboundedly. For adversarial long-chain graphs the
-alternating large-star/small-star algorithm (O(log n) rounds) is the
-drop-in upgrade; the interface is identical.
+Algorithm: match edges are the rare near-dup pairs, so an edge set up
+to ``max_driver_edges`` is collected and labelled by union-find — no
+per-round Spark jobs for a tiny graph. Larger edge sets run the
+alternating large-star/small-star algorithm as DataFrame joins and
+aggregates: O(log n) rounds on any graph shape, including long chains,
+with lineage truncated by localCheckpoint each round. Both routes give
+every node the minimum id of its component.
 """
 
 from __future__ import annotations
@@ -50,12 +45,9 @@ def connected_components(
       long chains where min-label propagation needs O(diameter)
       rounds. One groupBy + one join per half-round, lineage truncated
       per round. THE 100 TB default for big edge sets.
-    * ``propagation`` — iterative min-label propagation: one shuffle
-      per round, O(diameter) rounds. Fine for the near-clique clusters
-      entity-match graphs actually produce; kept for comparison.
     * ``driver`` — force the union-find route.
     """
-    if algorithm not in ("auto", "driver", "star", "propagation"):
+    if algorithm not in ("auto", "driver", "star"):
         raise ValueError(f"unknown CC algorithm {algorithm!r}")
     spark = edges.sparkSession
     # Materialize the edge set once, fully parallel, then decide the
@@ -94,47 +86,7 @@ def connected_components(
         return spark.createDataFrame(
             rows, f"node {node_type}, component {node_type}"
         )
-    if algorithm in ("auto", "star"):
-        return _cc_star(edge_rows, src, dst, max_iter)
-    # min-label propagation route: iterate over the cached edge rows
-    # (released when the caller's plan is done)
-    sym = (
-        edge_rows.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edge_rows.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
-    nodes = sym.select(F.col("u").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node"))
-
-    for _ in range(max_iter):
-        # neighbor minimum for every node
-        neigh_min = (
-            sym.join(labels.withColumnRenamed("node", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("component").alias("neigh_component"))
-            .withColumnRenamed("u", "node")
-        )
-        new_labels = (
-            labels.join(neigh_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("neigh_component"), F.col("component")),
-                ).alias("component"),
-            )
-        ).localCheckpoint(eager=True)  # truncate lineage each round
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    return _cc_star(edge_rows, src, dst, max_iter)
 
 
 def _cc_star(edge_rows: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import shingle_hashes, shingles, simhash_column
+from ..functions.text import shingle_hashes, shingles
 from ..functions.vectors import cosine_similarity
 
 
@@ -178,6 +178,30 @@ def ngram_jaccard_pairs(
     return out
 
 
+def banded_candidate_pairs(bands: DataFrame, *carry: str) -> DataFrame:
+    """The banded-LSH blocking join shared by MinHash, SimHash and
+    mention linking.
+
+    ``bands`` holds one row per (item, band): ``(_id, band_idx,
+    band_key, *carry)``. Two items are candidates iff they share a key
+    in at least one band, so candidate generation is ONE self-equi-join
+    on (band_idx, band_key) — a hash shuffle on short keys, never an
+    O(n²) cross join — with ``a._id < b._id``, then one drop of the id
+    pairs that collide in several bands. Output: ``(id_a, id_b)`` plus
+    ``<c>_a, <c>_b`` for every carried column ``c``; carried values are
+    assumed to be a function of ``_id``.
+    """
+    a, b = bands.alias("a"), bands.alias("b")
+    sides = [F.col(f"a.{c}").alias(f"{c}_a") for c in carry]
+    sides += [F.col(f"b.{c}").alias(f"{c}_b") for c in carry]
+    return (
+        a.join(b, on=["band_idx", "band_key"])
+        .where(F.col("a._id") < F.col("b._id"))
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"), *sides)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -198,7 +222,7 @@ def minhash_lsh_pairs(
     ``bands`` band signatures (the band's min-vector as a STRUCT key,
     not another md5 — signature equality IS min-vector equality, so
     hashing it buys nothing and costs an allocation per band) →
-    equi-join on (band_idx, band_sig) → exact-Jaccard verification of
+    ``banded_candidate_pairs`` → exact-Jaccard verification of
     the candidates only, over HASHED shingles (the gram text is never
     read there; see ``shingle_hashes``).
 
@@ -223,7 +247,7 @@ def minhash_lsh_pairs(
         *[F.min(f"h{j}").alias(f"m{j}") for j in range(num_hashes)]
     )
 
-    # Band signatures → (band_idx, band_sig, _id) rows.
+    # Band signatures → (_id, band_idx, band_key) rows.
     band_structs = []
     for bidx in range(bands):
         parts = [
@@ -235,19 +259,12 @@ def minhash_lsh_pairs(
         band_structs.append(
             F.struct(
                 F.lit(bidx).alias("band_idx"),
-                F.struct(*parts).alias("band_sig"),
+                F.struct(*parts).alias("band_key"),
             )
         )
-    bands_df = sig.select(
-        "_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("_id", "band.band_idx", "band.band_sig")
-
-    cand = (
-        bands_df.alias("a")
-        .join(bands_df.alias("b"), on=["band_idx", "band_sig"])
-        .where(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
+    cand = banded_candidate_pairs(
+        sig.select("_id", F.explode(F.array(*band_structs)).alias("band"))
+        .select("_id", "band.band_idx", "band.band_key")
     )
 
     # Exact verify on candidates only (semi-join-sized work), over
@@ -358,11 +375,11 @@ def simhash_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs: (id_a, id_b, hamming), id_a < id_b.
 
-    Per-doc ``bits``-bit SimHash (functions.text.simhash_column — pure
-    array expressions, no shuffle), then banded blocking: two docs
-    within hamming ≤ bands−1 must agree on ≥1 of ``bands`` equal-width
-    bit bands (pigeonhole), so the candidate join is an equi-join on
-    (band_idx, band_value). Final filter by exact popcount(xor).
+    Per-doc ``bits``-bit SimHash (``simhash_table``), then banded
+    blocking: two docs within hamming ≤ bands−1 must agree on ≥1 of
+    ``bands`` equal-width bit bands (pigeonhole), so the candidates
+    come from ``banded_candidate_pairs`` keyed by each band's value,
+    carrying the SimHash. Final filter by exact popcount(xor).
     """
     assert bits % bands == 0
     band_bits = bits // bands
@@ -373,26 +390,22 @@ def simhash_pairs(
             (
                 F.floor(F.col("sh") / F.lit(2 ** (bidx * band_bits))).cast("long")
                 % F.lit(2**band_bits)
-            ).alias("band_val"),
+            ).alias("band_key"),
         )
         for bidx in range(bands)
     ]
     banded = hashed.select(
         "_id", "sh", F.explode(F.array(*band_structs)).alias("band")
-    ).select("_id", "sh", "band.band_idx", "band.band_val")
-    pairs = (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["band_idx", "band_val"])
-        .where(F.col("a._id") < F.col("b._id"))
+    ).select("_id", "band.band_idx", "band.band_key", "sh")
+    return (
+        banded_candidate_pairs(banded, "sh")
         .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
         )
-        .distinct()
         .where(F.col("hamming") <= F.lit(max_hamming))
     )
-    return pairs
 
 
 def segment_dedup(
@@ -400,7 +413,6 @@ def segment_dedup(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shared_exchange: bool = True,
 ) -> DataFrame:
     """Sub-document dedup: drop repeated k-word segments, keep first
     occurrence (the C4-style "remove duplicated spans" pass — exact
@@ -425,16 +437,14 @@ def segment_dedup(
     fail under ANSI mode or silently null out and drop every
     segment).
 
-    ``shared_exchange`` (default True): one explicit seg-keyed shuffle
-    feeds both the first-key aggregate and the join probe via AQE
-    stage reuse, so the segment build runs once. THE TRADE (same as
-    ``duplicated_spans``): skew-join splitting only matches
-    ENSURE_REQUIREMENTS exchanges, so the REPARTITION_BY_COL partition
-    holding a pathological hot segment cannot be split — one straggler
-    task sorts all its occurrences (spilling, not OOMing: the min
-    aggregate over it is a single hash entry and a linear scan). Pass
-    False for corpora with single-segment duplication counts in the
-    10^7+ range.
+    One explicit seg-keyed shuffle feeds both the first-key aggregate
+    and the join probe via AQE stage reuse, so the segment build runs
+    once. THE TRADE (same as ``duplicated_spans``): skew-join splitting
+    only matches ENSURE_REQUIREMENTS exchanges, so the
+    REPARTITION_BY_COL partition holding a pathological hot segment
+    cannot be split — one straggler task sorts all its occurrences
+    (spilling, not OOMing: the min aggregate over it is a single hash
+    entry and a linear scan).
     """
     # stage the split as a projection first: each expression embedding
     # the token array would otherwise hold (and evaluate, per row) its
@@ -450,13 +460,11 @@ def segment_dedup(
         F.col(id_col).alias("_id"),
         F.split(F.col(text_col), " ").alias("_ws"),
     ).select("_id", seg_expr.alias("_segs"))
-    # shared_exchange trade-off documented in the docstring (same
-    # pattern and rationale as duplicated_spans)
+    # one seg-keyed exchange shared by the aggregate and the join probe,
+    # so the segment build runs once (skew trade in the docstring)
     segs = base.select(
         "_id", F.posexplode(F.col("_segs")).alias("pos", "seg")
-    )
-    if shared_exchange:
-        segs = segs.repartition(F.col("seg"))
+    ).repartition(F.col("seg"))
     firsts = segs.groupBy("seg").agg(
         F.min(F.struct("_id", "pos")).alias("fk")
     )
@@ -496,7 +504,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 12,
-    shared_exchange: bool = True,
 ) -> DataFrame:
     """Exact substring dedup, span detection (the Lee et al. 2022
     "Deduplicating Training Data" pass): find maximal word ranges that
@@ -541,18 +548,15 @@ def duplicated_spans(
     Same min(struct(id,pos)) first-key trick as segment_dedup, so
     string AND numeric ids both work. No Window over the corpus.
 
-    ``shared_exchange`` (default True): one explicit h-keyed shuffle
-    feeds both the firsts aggregate and the join probe via AQE stage
-    reuse — without it each consumer re-derives its own exchange above
-    a differently-shaped subtree and the whole window build runs TWICE
-    (measured 7.5 → 4.6 s on a ×64 input). THE TRADE: Spark's
-    skew-join splitter only matches ENSURE_REQUIREMENTS exchanges, so
-    the explicit REPARTITION_BY_COL partition holding a pathological
-    hot window (one identical k-gram in ~10^7+ docs) cannot be split —
-    that one task sorts all its occurrences (it spills rather than
-    OOMs, but it is a straggler). Pass ``shared_exchange=False`` for
-    corpora with single-window duplication counts that large; the
-    default trades that edge for computing the window build once.
+    One explicit h-keyed shuffle feeds both the firsts aggregate and
+    the join probe via AQE stage reuse — without it each consumer
+    re-derives its own exchange above a differently-shaped subtree and
+    the whole window build runs TWICE (measured 7.5 → 4.6 s on a ×64
+    input). THE TRADE: Spark's skew-join splitter only matches
+    ENSURE_REQUIREMENTS exchanges, so the explicit REPARTITION_BY_COL
+    partition holding a pathological hot window (one identical k-gram
+    in ~10^7+ docs) cannot be split — that one task sorts all its
+    occurrences (it spills rather than OOMs, but it is a straggler).
     """
     base = df.select(
         F.col(id_col).alias("_id"),
@@ -584,12 +588,12 @@ def duplicated_spans(
             ),
         ),
     ).otherwise(F.expr("CAST(array() AS array<struct<h1:long,h2:long>>)"))
-    # shared_exchange trade-off documented in the docstring; the lost
-    # pre-shuffle combine is free to give up either way: window keys
-    # are near-unique, map-side combine never reduced them
-    sh = hashed.select("_id", F.posexplode(win).alias("pos", "h"))
-    if shared_exchange:
-        sh = sh.repartition(F.col("h"))
+    # one h-keyed exchange shared by the aggregate and the join probe,
+    # so the window build runs once; the lost map-side combine costs
+    # nothing: window keys are near-unique
+    sh = hashed.select("_id", F.posexplode(win).alias("pos", "h")).repartition(
+        F.col("h")
+    )
     firsts = (
         sh.groupBy("h")
         .agg(
@@ -657,7 +661,6 @@ def substring_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 12,
-    shared_exchange: bool = True,
 ) -> DataFrame:
     """Exact substring dedup, removal form: splice the
     ``duplicated_spans`` ranges out of each doc.
@@ -675,13 +678,7 @@ def substring_dedup(
     """
     empty_spans = F.expr("CAST(array() AS array<struct<s:int,e:int>>)")
     sp = (
-        duplicated_spans(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            k=k,
-            shared_exchange=shared_exchange,
-        )
+        duplicated_spans(df, id_col=id_col, text_col=text_col, k=k)
         .groupBy(id_col)
         .agg(
             F.collect_list(
@@ -806,7 +803,6 @@ def embedding_cosine_pairs(
     block_col: str | None = None,
     vectorized: bool = True,
     chunks: int = 8,
-    broadcast_corpus: bool = False,
 ) -> DataFrame:
     """Semantic near-dup pairs by embedding cosine ≥ threshold.
 
@@ -825,18 +821,11 @@ def embedding_cosine_pairs(
       the shuffle volume is (chunks+1)·n vectors. Exact all-pairs is
       inherently O(n²) compute; above ~10⁷ rows use ``block_col`` (LSH
       sign buckets) for the sub-quadratic scale path.
-    * ``broadcast_corpus=True`` (opt-in) — old small-corpus shortcut:
-      broadcast the whole L2-normalized matrix and matmul each Arrow
-      batch against it. Zero shuffle but collects the corpus to the
-      driver; ONLY for n_vectors × dim that comfortably fits driver and
-      executor memory (≲10⁶ × 64).
     * expression fallback (``vectorized=False``) — pure built-in
       crossJoin + zip_with/aggregate; the slow-but-dependency-free
       correctness baseline the others are tested against.
     """
     if block_col is None and vectorized:
-        if broadcast_corpus:
-            return _cosine_pairs_vectorized(df, threshold, id_col, vec_col)
         return _cosine_pairs_chunked(df, threshold, id_col, vec_col, chunks)
     cols = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")]
     if block_col is not None:
@@ -931,45 +920,3 @@ def _cosine_pairs_chunked(
 
     return both.groupBy("ci", "cj").applyInPandas(compute, schema)
 
-
-def _cosine_pairs_vectorized(
-    df: DataFrame, threshold: float, id_col: str, vec_col: str
-) -> DataFrame:
-    """Exact all-pairs cosine via broadcast matrix + per-batch matmul.
-
-    OPT-IN small-corpus shortcut (``broadcast_corpus=True``): collects
-    the corpus (ids + L2-normalized float64 vectors) to the DRIVER and
-    broadcasts it; each Arrow batch computes chunk @ corpus.T and emits
-    (id_a, id_b), a < b, for sims ≥ threshold. Zero shuffle, but driver
-    memory bounds it to ~10⁶×64 — the chunked route is the default.
-    """
-    import numpy as np
-    import pandas as pd
-    from typing import Iterator
-
-    schema = _pair_schema(df, id_col)
-    pdf = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toPandas()
-    if len(pdf) == 0:
-        return df.sparkSession.createDataFrame([], schema)
-    ids = pdf["_id"].to_numpy()
-    mat = _norm_matrix(pdf["_v"])
-    bc = df.sparkSession.sparkContext.broadcast((ids, mat))
-    thr = float(threshold)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_mat = bc.value
-        for chunk in batches:
-            if len(chunk) == 0:
-                continue
-            cids = chunk["_id"].to_numpy()
-            sims = _norm_matrix(chunk["_v"]) @ all_mat.T
-            rows_i, cols_j = np.nonzero(sims >= thr)
-            keep = cids[rows_i] < all_ids[cols_j]  # a < b, excludes self
-            yield pd.DataFrame(
-                {"id_a": cids[rows_i][keep], "id_b": all_ids[cols_j][keep]}
-            )
-
-    return (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .mapInPandas(run, schema)
-    )

@@ -9,9 +9,12 @@ SURVEY.md §4.2.5). Dataflow:
     → embed (Arrow-batched pandas UDF over the deterministic encoder;
        mean-pooled token vectors, the M8 representation)
     → SimHash-style random-hyperplane LSH signatures, banded
-    → candidate pairs = self-equi-join on (band, band_signature)
-       — this is the scale move: candidate generation is a hash
-       shuffle on short keys, NEVER an O(n²) cross join
+    → candidate pairs = the band columns exploded into (band_idx,
+       band_key) rows and ONE self-equi-join on them, carrying the
+       embedding (dedup.banded_candidate_pairs, shared with MinHash
+       and SimHash) — this is the scale move: candidate generation is
+       a hash shuffle on short keys, NEVER an O(n²) cross join, and the
+       embed/sign Python subtree is built once per join side
     → exact cosine on candidates only; keep pairs ≥ threshold.
 
 At 10^12 docs the bucket join is the only shuffle; bucket sizes are
@@ -29,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..model.encoder import get_encoder
+from .dedup import banded_candidate_pairs
 
 EMBED_DIM = 64
 
@@ -51,7 +55,6 @@ def embed_mentions(
 ) -> DataFrame:
     """Append ``embedding array<float>`` — mean-pooled token vectors
     (the M8 label/mention representation) via Arrow-batched UDF."""
-    cols = mentions.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = get_encoder(dim, seed)
@@ -81,7 +84,6 @@ def add_lsh_signature(
     ``bands`` band-signatures. Cosine-similar vectors collide in ≥1 band
     with high probability."""
     rows_per_band = n_planes // bands
-    cols = df.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rng = np.random.default_rng(seed)
@@ -117,30 +119,24 @@ def lsh_candidate_pairs(
     bands: int = 4,
     sim_threshold: float = 0.85,
 ) -> DataFrame:
-    """Self-join per band → distinct candidate pairs → exact cosine →
-    matches(src, dst, sim). ``src < dst`` canonical orientation."""
-    pairs = None
-    left = df.select(
-        F.col(id_col).alias("src"),
-        F.col("embedding").alias("emb_src"),
-        *[F.col(f"band_{b}") for b in range(bands)],
-    ).dropDuplicates(["src"])
-    right = df.select(
-        F.col(id_col).alias("dst"),
-        F.col("embedding").alias("emb_dst"),
-        *[F.col(f"band_{b}").alias(f"rband_{b}") for b in range(bands)],
-    ).dropDuplicates(["dst"])
-    for b in range(bands):
-        p = left.join(
-            right,
-            (F.col(f"band_{b}") == F.col(f"rband_{b}")) & (F.col("src") < F.col("dst")),
-        ).select("src", "dst", "emb_src", "emb_dst")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.dropDuplicates(["src", "dst"])
+    """Rows keyed by ``id_col`` with ``embedding`` and ``band_0..`` →
+    distinct candidate pairs sharing a band → exact cosine →
+    matches(src, dst, sim), ``src < dst`` canonical orientation."""
+    band_rows = df.select(
+        F.col(id_col).alias("_id"),
+        F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias(
+            "band_idx", "band_key"
+        ),
+        "embedding",
+    )
     return (
-        pairs.withColumn("sim", cosine_expr("emb_src", "emb_dst"))
+        banded_candidate_pairs(band_rows, "embedding")
+        .select(
+            F.col("id_a").alias("src"),
+            F.col("id_b").alias("dst"),
+            cosine_expr("embedding_a", "embedding_b").alias("sim"),
+        )
         .where(F.col("sim") >= sim_threshold)
-        .select("src", "dst", "sim")
     )
 
 

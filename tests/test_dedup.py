@@ -177,19 +177,6 @@ class TestEmbeddingCosineRoutes:
         assert chunked == exact
         assert {(0, 100), (5, 101), (9, 102)} <= chunked
 
-    def test_broadcast_optin_matches_chunked(self, many_vecs):
-        bcast = {
-            (r.id_a, r.id_b)
-            for r in embedding_cosine_pairs(
-                many_vecs, threshold=0.9, broadcast_corpus=True
-            ).collect()
-        }
-        chunked = {
-            (r.id_a, r.id_b)
-            for r in embedding_cosine_pairs(many_vecs, threshold=0.9, chunks=3).collect()
-        }
-        assert bcast == chunked
-
     def test_string_ids_all_routes(self, spark):
         rows = [
             ("docA", [1.0, 0.0, 0.0, 0.0]),
@@ -197,7 +184,7 @@ class TestEmbeddingCosineRoutes:
             ("docC", [0.0, 1.0, 0.0, 0.0]),
         ]
         vecs = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-        for kwargs in ({}, {"broadcast_corpus": True}, {"vectorized": False}):
+        for kwargs in ({}, {"vectorized": False}):
             out = embedding_cosine_pairs(vecs, threshold=0.9, **kwargs)
             assert dict(out.dtypes)["id_a"] == "string"
             assert {(r.id_a, r.id_b) for r in out.collect()} == {("docA", "docB")}
@@ -412,18 +399,6 @@ class TestSubstringDedup:
         out = substring_dedup(docs, k=12)
         assert out.count() == docs.count()
         assert out.where("n_dup_words > 0").count() > 0
-
-    def test_shared_exchange_knob_output_identical(self, spark):
-        """shared_exchange trades AQE skew-splittability for a
-        build-once plan; both settings must produce identical rows
-        (substring AND segment operators)."""
-        from gliner_spark.operators.dedup import segment_dedup, substring_dedup
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        for fn, kw in ((substring_dedup, dict(k=12)), (segment_dedup, dict(k=10))):
-            a = sorted(map(tuple, fn(docs, shared_exchange=True, **kw).collect()))
-            b = sorted(map(tuple, fn(docs, shared_exchange=False, **kw).collect()))
-            assert a == b, fn.__name__
 
     def test_null_text_cleans_to_empty(self, spark):
         """Real crawl tables carry null text; it must come back as

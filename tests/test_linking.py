@@ -64,6 +64,69 @@ class TestLinking:
         assert sims[0] == pytest.approx(1.0, abs=1e-6)
         assert sims[1] == pytest.approx(0.0, abs=1e-6)
 
+    @pytest.mark.parametrize("n_planes,bands", [(16, 4), (16, 8)])
+    def test_link_mentions_matches_numpy_restatement(self, spark, n_planes, bands):
+        """link_mentions edge for edge against a numpy restatement:
+        mean-pooled unit embeddings, seed-7 random hyperplanes, MSB-first
+        band keys, the union of same-key pairs over all bands, then the
+        exact cosine (doubles, folded left to right) against the
+        threshold."""
+        import random
+        import re
+
+        import numpy as np
+
+        from gliner_spark.model.encoder import get_encoder
+        from gliner_spark.operators.linking import EMBED_DIM
+
+        rng = random.Random(11)
+        vocab = ["acme", "corp", "globex", "john", "smith", "mary", "jones",
+                 "initech", "labs", "north", "river", "bank", "city", "hall"]
+        texts = ["  Acme   Corp. ", "ACME CORP", "(acme corp)", "", "!!!"]
+        texts += [" ".join(rng.choice(vocab) for _ in range(rng.randint(1, 3)))
+                  for _ in range(120)]
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        thr = 0.6
+        got = {(r.src, r.dst): r.sim for r in link_mentions(
+            df, sim_threshold=thr, n_planes=n_planes, bands=bands).collect()}
+
+        def norm(t):
+            t = re.sub(r"\s+", " ", t.lower(), flags=re.ASCII)
+            return re.sub(r"^[^\w]+|[^\w]+$", "", t, flags=re.ASCII).strip(" ")
+
+        norms = sorted({norm(t) for t in texts} - {""})
+        enc = get_encoder(EMBED_DIM, 42)
+        emb = []
+        for t in norms:
+            v = np.mean([enc.token_embedding(w) for w in t.split()], axis=0)
+            emb.append(v / (np.linalg.norm(v) + 1e-9))
+        emb = np.asarray(emb, dtype=np.float32)  # the array<float> column
+        planes = np.random.default_rng(7).standard_normal((n_planes, EMBED_DIM))
+        bits = (emb @ planes.T > 0).astype(np.int64)
+        rpb = n_planes // bands
+        cand = set()
+        for b in range(bands):
+            keys = bits[:, b * rpb:(b + 1) * rpb] @ (2 ** np.arange(rpb - 1, -1, -1))
+            for i in range(len(norms)):
+                for j in range(i + 1, len(norms)):
+                    if keys[i] == keys[j]:
+                        cand.add((i, j))
+        e = emb.astype(np.float64)
+        exp = {}
+        for i, j in cand:
+            dot = sq_i = sq_j = 0.0
+            for k in range(EMBED_DIM):
+                dot += e[i, k] * e[j, k]
+                sq_i += e[i, k] * e[i, k]
+                sq_j += e[j, k] * e[j, k]
+            sim = dot / (np.sqrt(sq_i) * np.sqrt(sq_j))
+            if sim >= thr:
+                exp[(norms[i], norms[j])] = sim
+        assert len(exp) > 20
+        assert set(got) == set(exp)
+        for key, sim in exp.items():
+            assert got[key] == pytest.approx(sim, abs=1e-12), key
+
     def test_lsh_recall_vs_bruteforce(self, spark):
         # banded LSH must recover the vast majority of high-cos pairs
         rows = [(f"mention {i} shared tail words here",) for i in range(30)]
@@ -115,9 +178,8 @@ class TestConnectedComponents:
 
 class TestStarConnectedComponents:
     """large-star/small-star route (round 2): identical assignments to
-    the driver union-find and min-label propagation on every graph
-    shape, including long chains where propagation needs O(diameter)
-    rounds but star needs O(log n)."""
+    the collected union-find route on every graph shape, including long
+    chains, where star needs O(log n) rounds."""
 
     def _assign(self, spark, pairs, algorithm, **kw):
         from gliner_spark.operators.canonicalize import connected_components
@@ -166,12 +228,12 @@ class TestStarConnectedComponents:
     def test_all_algorithms_agree(self, spark):
         pairs = [(i, i + 1) for i in range(12)] + [(100, 101), (101, 102), (200, 200)]
         exp = self._reference(pairs)
-        for algo in ("driver", "propagation", "star"):
+        for algo in ("driver", "star"):
             got = self._assign(spark, pairs, algo, max_driver_edges=0 if algo != "driver" else 10**9)
             assert got == exp, algo
 
     def test_auto_routes_star_above_threshold(self, spark, monkeypatch):
-        # force the big-graph route and ensure star (not propagation)
+        # force the big-graph route and ensure it runs star
         from gliner_spark.operators import canonicalize as cz
 
         called = {}
@@ -187,5 +249,6 @@ class TestStarConnectedComponents:
         assert called.get("star") and got == self._reference(pairs)
 
     def test_unknown_algorithm(self, spark):
-        with pytest.raises(ValueError, match="algorithm"):
-            self._assign(spark, [(0, 1)], "graphx")
+        for algo in ("graphx", "propagation"):
+            with pytest.raises(ValueError, match="algorithm"):
+                self._assign(spark, [(0, 1)], algo)

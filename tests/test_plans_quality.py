@@ -337,3 +337,22 @@ class TestSubstringAndResolvePlans:
             E.queries()["dedup_resolve"](spark, "/root/testdata/sf0.001")
         )
         assert "CartesianProduct" not in plan
+
+
+class TestLinkingPlanShape:
+    def test_link_mentions_builds_embedding_once_per_join_side(self, spark):
+        """Linking explodes its band columns into (band_idx, band_key)
+        rows and runs ONE self-join, so the embed → sign Python subtree
+        appears once per join side (2 × 2 MapInPandas) — a join per band
+        would rebuild it on both sides of every band's join."""
+        import re
+
+        from gliner_spark.operators.linking import link_mentions
+
+        df = spark.createDataFrame(
+            [("acme corp",), ("acme corporation",), ("john smith",)], "text string"
+        )
+        plan = formatted_plan(link_mentions(df))
+        n_py = len(re.findall(r"[+:]- MapInPandas", plan))
+        assert n_py <= 4, plan
+        assert "CartesianProduct" not in plan
