@@ -1,6 +1,8 @@
 """End-to-end pipeline kernel tests (no Spark): determinism, shape,
 invariants, relex dataflow."""
 
+import functools
+
 import pytest
 
 from gliner_spark.model.pipeline import GLiNERPipeline, PipelineConfig
@@ -156,3 +158,184 @@ class TestTokenModeArgThreading:
         for e in ents:
             assert e.get("class_probs"), "token mode must attach class_probs"
             assert all(0.0 <= v <= 1.0 for v in e["class_probs"].values())
+
+
+# ---------------------------------------------------------------------------
+# golden route digests
+# ---------------------------------------------------------------------------
+
+
+@functools.lru_cache(maxsize=None)
+def _golden_routes():
+    """name -> (kind, pipeline kwargs, call kwargs) for every extraction
+    route: the 16 rows-only extraction gates of ``__spark_entry__``
+    configured as the gates configure them, plus ``kg_triples``'
+    gazetteer scoring, ``return_class_probs``, ``input_spans`` and the
+    generative ``decoder_mode="prompt"``."""
+    import __spark_entry__ as entry
+    from gliner_spark.model.encoder import get_encoder
+    from gliner_spark.model import ort_testing as ort
+
+    labels, rels = entry.ENT_LABELS, entry.RELATIONS
+    embs = get_encoder(64, 42).embed_labels(labels)
+    gaz = dict(gazetteer=entry.GAZ_FULL)
+    gaz_pat = dict(gazetteer=entry.GAZ_FULL, patterns=entry.PATTERNS)
+    gen = dict(gen_constraints=entry.GEN_CONSTRAINTS, num_gen_sequences=2)
+
+    def ent(cfg, call=None, **kw):
+        return "entities", dict(labels=labels, config=PipelineConfig(**cfg), **kw), call or {}
+
+    def tri(cfg, **kw):
+        return "triples", dict(labels=labels, relations=rels, config=PipelineConfig(**cfg), **kw), {}
+
+    def genl(cfg, call, **kw):
+        return "generative", dict(labels=labels, config=PipelineConfig(**cfg), **kw), call
+
+    tok = dict(mode="token")
+    return {
+        "kg_entities_zeroshot": ent(dict(threshold=0.5)),
+        "kg_entities_tokenmode": ent(dict(threshold=0.4, **tok)),
+        "kg_entities_convspan": ent(dict(threshold=0.55, span_mode="conv_mean")),
+        "kg_entities_rnn": ent(dict(threshold=0.55, num_rnn_layers=1)),
+        "kg_entities_biencoder_token": ent(dict(threshold=0.4, **tok), label_embeddings=embs),
+        "kg_entities_onnx": ent(dict(threshold=0.5), encoder=ort.fake_span_encoder_factory()),
+        "kg_entities_tokenmode_onnx": ent(
+            dict(threshold=0.4, **tok), encoder=ort.fake_token_encoder_factory()
+        ),
+        "kg_entities_biencoder_onnx": ent(
+            dict(threshold=0.5), label_embeddings=embs,
+            encoder=ort.fake_biencoder_span_encoder_factory(),
+        ),
+        "kg_entities_biencoder_token_onnx": ent(
+            dict(threshold=0.4, **tok), label_embeddings=embs,
+            encoder=ort.fake_biencoder_token_encoder_factory(),
+        ),
+        "kg_entities_genlabels": genl(dict(threshold=0.5), gen, **gaz),
+        "kg_entities_genlabels_token": genl(dict(threshold=0.35, **tok), gen),
+        "kg_triples_zeroshot": tri(dict(threshold=0.5), **gaz_pat),
+        "kg_triples_adjmode_gcn": tri(dict(threshold=0.5, relations_mode="gcn"), **gaz_pat),
+        "kg_triples_onnx": tri(dict(threshold=0.5), encoder=ort.fake_relex_encoder_factory()),
+        "kg_triples_tokenmode": tri(
+            dict(threshold=0.4, adjacency_threshold=0.35, relation_threshold=0.2, **tok)
+        ),
+        "kg_triples_tokenmode_onnx": tri(
+            dict(threshold=0.5, **tok), encoder=ort.fake_token_relex_encoder_factory()
+        ),
+        "kg_triples": tri(dict(threshold=0.5, scoring="gazetteer"), **gaz_pat),
+        "class_probs_span": ent(dict(threshold=0.5), dict(return_class_probs=True), **gaz),
+        "class_probs_token": ent(dict(threshold=0.4, **tok), dict(return_class_probs=True)),
+        "class_probs_onnx": ent(
+            dict(threshold=0.5), dict(return_class_probs=True),
+            encoder=ort.fake_span_encoder_factory(),
+        ),
+        "input_spans_span": ent(dict(threshold=0.5), dict(input_spans=True), **gaz),
+        "input_spans_token": ent(dict(threshold=0.4, **tok), dict(input_spans=True)),
+        "input_spans_onnx": ent(
+            dict(threshold=0.5), dict(input_spans=True),
+            encoder=ort.fake_span_encoder_factory(),
+        ),
+        "genlabels_prompt": genl(dict(threshold=0.5), dict(decoder_mode="prompt", **gen), **gaz),
+        "genlabels_prompt_token": genl(
+            dict(threshold=0.35, **tok), dict(decoder_mode="prompt", **gen)
+        ),
+    }
+
+
+# (sha256 of json.dumps(per-doc outputs, sort_keys=True, default=repr),
+#  gate rows: entities for entity routes, relations for triple routes)
+# over the first 100 sf0.001 documents.
+GOLDEN = {
+    "kg_entities_zeroshot": ("b1c3f12c9b945049c884b36a49cd8702bdf10eb7dcddc98b64b4c2e71c3aaa19", 840),
+    "kg_entities_tokenmode": ("0c70a38d5161c201321f0c1f6d326320847009bdc21db83f979939ab1b21c6ad", 925),
+    "kg_entities_convspan": ("6bf86c26ad1c8a23637d90dac933634be7e78c8612126fabe1a890e24fe2732f", 468),
+    "kg_entities_rnn": ("c6f6f009a162167c122d2fc3d61392c443da5a6f76fef9deb4cfc23f018fb3fa", 665),
+    "kg_entities_biencoder_token": ("0c70a38d5161c201321f0c1f6d326320847009bdc21db83f979939ab1b21c6ad", 925),
+    "kg_entities_onnx": ("6070337cc02e6b4cfafd9a91312d61f46a91a9c03910be5f740d3b5fea58c2b8", 618),
+    "kg_entities_tokenmode_onnx": ("c7c439c13e61f3a34bc244a67d8fc3a1faef1b0a033a0e6fa6b4aba16532f805", 547),
+    "kg_entities_biencoder_onnx": ("eac7cba30f4c3219072ee48aec5d2a4aca2207398cf57d415d553dae1bb448cd", 728),
+    "kg_entities_biencoder_token_onnx": ("78b1ceb48b95253d5bc4ba4b0344d561adce93ca26e9c99c4eee76df03f65f5f", 848),
+    "kg_entities_genlabels": ("d1fd44df4fbdbf637bff2b6fff72bee80fed06efcbf25e95adfa1696f6b5bb63", 2351),
+    "kg_entities_genlabels_token": ("337d41bfd14871259b406ff7c2c613c59c5d140a2f07291fd92238236d1c8240", 577),
+    "kg_triples_zeroshot": ("34d7d8db46f4d549636c5992b857567bea605c431276cb7a011e38a84dddd647", 5858),
+    "kg_triples_adjmode_gcn": ("75d670e0cb66d7f7972d305a551d6545e2dd7f0ed63dfa831c443a062f6ee9f9", 5705),
+    "kg_triples_onnx": ("c7953ca50ad4d493fe3d9d1aa7f18850d222ba5b210fa7ff893d48713bbc1e21", 2018),
+    "kg_triples_tokenmode": ("fe11b951fdffce9afe8ab73c58a71bac52027f120301b6a26d659450ac78f581", 756),
+    "kg_triples_tokenmode_onnx": ("94e161fde0b989f815b64f7166629f7c810b2c1f2eaedd3882f7e28a9ff4358a", 4884),
+    "kg_triples": ("506e1fe781e4ed8c4b18209747db2ee690ead97169cc1707c9a7a0512e46ea6a", 825),
+    "class_probs_span": ("88d63105159a0663b590a5510dcfafc81e1f6a944de868150f2cb4e850ce6f56", 2351),
+    "class_probs_token": ("c37dc4c2a0184af9ba3ca469d560fa9c179f9c289f1bf10d327b3b9ec503a707", 925),
+    "class_probs_onnx": ("cff6b5b2aa0937e6b534f588fba40a91ed19d140d592a9c048240c9ff2c9fe77", 618),
+    "input_spans_span": ("034b887f8a82840b15f63e6f30f8ea454f51bbb7c3675c79d5ad52cdac1b3106", 842),
+    "input_spans_token": ("3f9003e453664f1d7c6d67ad15893e9db42c96c794f4c7d4418da58e38b5f911", 305),
+    "input_spans_onnx": ("9c14172702acbc23e2d6a920cb0250c3ab7e3d34a257f4dc032f356748d24b6c", 189),
+    "genlabels_prompt": ("0081d7661e29eb70da2f29b050c89ff94502db39a342d3b031a38913dbaa03c8", 2351),
+    "genlabels_prompt_token": ("6ad8eb1218ddd9b60d68b604bb89d4bb594e7aa75edc76cdbc990bde0ef190c0", 577),
+}
+
+
+@pytest.fixture(scope="module")
+def golden_docs():
+    import pandas as pd
+
+    from tests.test_kernel_oracle import SF_DIRS
+
+    pdf = pd.read_parquet(f"{SF_DIRS[0]}/documents.parquet", columns=["text"])
+    return list(pdf["text"][:100])
+
+
+def _input_spans(text):
+    """Char spans for ``input_spans``: word-aligned unigrams and bigrams
+    plus one span that starts mid-word (dropped, P6)."""
+    from gliner_spark.kernel.tokenization import tokenize_with_offsets
+
+    _tokens, starts, ends = tokenize_with_offsets(text)
+    spans = [(starts[j], ends[min(j + 1, len(ends) - 1)]) for j in range(0, len(starts), 3)]
+    spans += [(starts[j], ends[j]) for j in range(1, len(starts), 3)]
+    if starts and ends[0] - starts[0] > 1:
+        spans.append((starts[0] + 1, ends[0]))
+    return spans
+
+
+def _golden_run(name, docs):
+    import hashlib
+    import json
+
+    kind, pipe_kw, call = _golden_routes()[name]
+    pipe = GLiNERPipeline(**pipe_kw)
+    call = dict(call)
+    if kind == "generative":
+        out = [pipe.predict_entities_generative(t, "en", **call) for t in docs]
+        rows, batch = sum(map(len, out)), None
+    elif kind == "triples":
+        out = [pipe.predict_triples(t, "en") for t in docs]
+        rows = sum(len(r) for _e, r in out)
+        batch = [tuple(x) for x in pipe.predict_triples_batch(docs, ["en"] * len(docs))]
+    else:
+        spans = [_input_spans(t) for t in docs] if call.pop("input_spans", False) else None
+        out = [
+            pipe.predict_entities(t, "en", input_spans=spans[k] if spans else None, **call)
+            for k, t in enumerate(docs)
+        ]
+        rows = sum(map(len, out))
+        batch = pipe.predict_entities_batch(
+            docs, ["en"] * len(docs), input_spans_list=spans, **call
+        )
+    digest = hashlib.sha256(
+        json.dumps(out, sort_keys=True, default=repr).encode()
+    ).hexdigest()
+    return digest, rows, out, batch
+
+
+@pytest.mark.parametrize("name", sorted(GOLDEN))
+def test_golden_route(name, golden_docs):
+    """Every extraction route's absolute output over 100 documents is
+    pinned (floats included, through repr), and per-document calls
+    equal batched calls row for row."""
+    digest, rows, out, batch = _golden_run(name, golden_docs)
+    assert (digest, rows) == GOLDEN[name]
+    if batch is not None:
+        assert batch == out
+
+
+def test_golden_covers_every_route():
+    assert set(GOLDEN) == set(_golden_routes())
