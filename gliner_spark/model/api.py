@@ -129,7 +129,7 @@ class SparkGLiNER:
         threshold: Optional[float] = None,
     ) -> List[List[Dict[str, Any]]]:
         pipe = self._pipe_for(labels)
-        return [pipe.predict_entities(t, threshold=threshold) for t in texts]
+        return pipe.predict_entities_batch(list(texts), threshold=threshold)
 
     def configure_inference_packing(self, config) -> None:
         """Default packing for batched session inference (reference

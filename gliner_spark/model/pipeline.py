@@ -1,15 +1,29 @@
-"""End-to-end inference pipeline (per-document kernel).
+"""End-to-end inference pipeline (the per-batch kernel).
 
 This is the body that runs inside every Arrow batch on executors — the
 direct analog of the reference's ``inference`` flow
 (gliner/model.py:1384-1491) and the relex flow
-(gliner/model.py:2404-2613):
+(gliner/model.py:2404-2613). Every extraction route is the same three
+stages, each written once:
 
-  filter valid text → word tokenize (+offset maps) → truncate to max_len
-  → [prompt construction] → span enumeration → span×label scoring →
-  sigmoid+threshold → greedy overlap resolution → char mapping
-  → (relex: confident-span selection → adjacency → pair scoring →
-     relation decode with the index-alignment quirk)
+1. **Prepare** (``_prepare_batch``): filter valid text (P1) → word
+   tokenize with offset maps → truncate to ``max_len`` (P3).
+2. **Score** (``_score_batch``): a session backend makes one call per
+   length-sorted ``_session_chunks`` chunk (span, token, relex and
+   token-relex graphs; the relex graphs select spans and score pairs
+   in-graph). The deterministic backend scores one document at a time:
+   the span grid plus the gazetteer, or BIO token probabilities; for
+   triples it then selects confident spans (span mode) or proposes
+   candidates from the BIO flags (token mode) and runs the relex tail,
+   adjacency → directed pairs → pair×relation scoring.
+3. **Decode** (``_decode``): ``decode_span_probs`` or
+   ``decode_token_scores`` by ``config.mode`` → ``map_spans_to_char``;
+   triples add ``decode_relations`` (the pre-greedy/post-greedy
+   index-alignment quirk, decoder.py:822) → ``format_relations``.
+
+``predict_entities`` / ``predict_triples`` are one-document calls of
+the batch methods. The generative routes reuse stages 1 and 2 and the
+confident-span selection and add their own label-generation step.
 
 Pure Python/numpy — no Spark imports — so the identical code path is
 unit-testable off-cluster and callable from ``mapInPandas``.
@@ -24,11 +38,11 @@ import numpy as np
 
 from ..kernel.tokenization import tokenize_with_offsets
 from ..kernel.spans import make_mapping, span_idx_array
-from ..kernel.prompts import build_entity_prompt, build_relex_prompt
 from ..kernel.decoding import (
-    Span,
     decode_relations,
     decode_span_probs,
+    decode_token_scores,
+    extract_spans_from_token_probs,
     sigmoid,
 )
 from ..kernel.charmap import format_relations, map_spans_to_char
@@ -277,61 +291,159 @@ class GLiNERPipeline:
             ends = ends[: self.config.max_len]
         return tokens, starts, ends
 
-    def _score_spans(self, tokens: Sequence[str]) -> Tuple[np.ndarray, np.ndarray]:
+    def _prepare_batch(self, texts: Sequence[str], langs: Optional[Sequence[str]]):
+        """Stage 1: ``(doc index, tokens, starts, ends)`` for every
+        document with text and at least one token."""
+        lang_list = list(langs) if langs is not None else ["en"] * len(texts)
+        prepared = []
+        for i, (text, lang) in enumerate(zip(texts, lang_list)):
+            if not isinstance(text, str) or not text.strip():
+                continue  # _filter_valid_texts (model.py:1222-1241)
+            tokens, starts, ends = self._prepare(text, lang or "en")
+            if tokens:
+                prepared.append((i, tokens, starts, ends))
+        return prepared
+
+    def _thresholds(self, threshold: Optional[float]) -> Tuple[float, float, float]:
+        """(span, adjacency, relation) thresholds; the last two default
+        to the span threshold (model.py:2457-2461)."""
+        cfg = self.config
+        thr = cfg.threshold if threshold is None else threshold
+        adj = cfg.adjacency_threshold if cfg.adjacency_threshold is not None else thr
+        rel = cfg.relation_threshold if cfg.relation_threshold is not None else thr
+        return thr, adj, rel
+
+    def _session_call(self, relex: bool) -> Optional[str]:
+        """Name of the session method that scores this route one chunk
+        at a time, or None when the deterministic backend scores it one
+        document at a time."""
+        enc = self.encoder
+        if self.config.mode == "token":
+            if relex:
+                if not self.is_session_backend:
+                    return None
+                if not hasattr(enc, "token_relex_outputs"):
+                    raise ValueError(
+                        "token-mode triples on a session backend need a token-relex "
+                        "graph (logits/rel_idx/rel_logits/rel_mask, no span grid — "
+                        "gliner/model.py:2916-2952); this session exports "
+                        f"{type(enc).__name__} outputs only"
+                    )
+                return "token_relex_outputs"
+            if hasattr(enc, "token_probs"):
+                return "token_probs"
+            if not hasattr(enc, "token_label_scores"):
+                raise ValueError(
+                    "token mode needs a token-scoring backend (DeterministicEncoder "
+                    "or OnnxTokenEncoder); a span-mode ONNX session cannot produce "
+                    "(W,C,3) start/end/inside scores — export the token-mode graph "
+                    "(gliner/model.py:1941-1989)"
+                )
+            return None
+        if not self.is_session_backend or self.config.scoring == "gazetteer":
+            return None
+        if relex and getattr(enc, "supports_relations", False):
+            return "relex_outputs"
+        # entities, or triples on a span-only graph: the constructor
+        # rejects relations there, so its triples are entities only
+        return "span_probs"
+
+    def _score_batch(self, prepared, texts, relex=False, thr=None, adj_thr=None):
+        """Stage 2: yield ``(prepared item, probs, rel_idx, rel_probs)``
+        per document, in any order. ``probs`` is (L, K, C) in span mode
+        (gazetteer applied) and (W, C, 3) start/end/inside in token
+        mode; ``rel_idx``/``rel_probs`` are None unless ``relex`` scored
+        at least one pair."""
+        if not prepared:
+            return
+        call = self._session_call(relex)
+        span_mode = self.config.mode != "token"
+        if call is None:
+            for item in prepared:
+                i, tokens, starts, ends = item
+                probs, span_reps = self._score_doc(tokens, texts[i], starts, ends)
+                rel_idx = rel_probs = None
+                if relex and span_mode:
+                    packed_idx, cand, label_idx = self._confident_spans(probs, tokens, thr)
+                    reps = None if span_reps is None else span_reps[packed_idx]
+                    rel_idx, rel_probs = self._relex_tail(
+                        tokens, cand, adj_thr, reps, label_idx
+                    )
+                elif relex:
+                    # token-mode joint relex (UniEncoderTokenRelexGLiNER,
+                    # gliner/model.py:2902): the BIO flags propose the
+                    # candidate list (represent_spans override,
+                    # base.py:2497-2514), not the L×K grid
+                    rel_idx, rel_probs = self._relex_tail(
+                        tokens, self._token_candidates(probs, thr), adj_thr
+                    )
+                yield item, probs, rel_idx, rel_probs
+            return
+        run = getattr(self.encoder, call)
+        # documents length-sorted first so each padded session feed is
+        # length-homogeneous (the cheap 80% of the reference's packing
+        # win, infer_packing.py:164-208)
+        order = sorted(range(len(prepared)), key=lambda j: -len(prepared[j][1]))
+        for idx_chunk in self._session_chunks(order, prepared):
+            chunk = [prepared[j] for j in idx_chunk]
+            batch = [c[1] for c in chunk]
+            if call.endswith("relex_outputs"):
+                # the graph runs confident-span selection (or candidate
+                # proposal), adjacency and pair scoring itself at the
+                # export-default thresholds (gliner/model.py:2871-2900,
+                # 2916-2952); the forward signature takes no threshold
+                outs = run(batch, self.labels, self.relations)
+            elif getattr(self.encoder, "accepts_label_embeddings", False):
+                # bi-encoder graphs take the precomputed label matrix
+                # (labels_embeddings input, gliner/model.py:1746)
+                outs = [
+                    (p, None, None)
+                    for p in run(batch, self.labels, label_embeddings=self.label_embs)
+                ]
+            else:
+                outs = [(p, None, None) for p in run(batch, self.labels)]
+            for item, (probs, rel_idx, rel_probs) in zip(chunk, outs):
+                if span_mode:
+                    probs = self._apply_gazetteer(probs, texts[item[0]], item[2], item[3])
+                yield item, probs, rel_idx, rel_probs
+
+    def _score_doc(self, tokens, text, starts, ends):
+        """Deterministic scoring of one document: span mode gives
+        ``(probs (L, K, C), span_reps)`` with the gazetteer applied;
+        token mode gives ``((W, C, 3) start/end/inside probs, None)``
+        (M7)."""
+        if self.config.mode == "token":
+            token_embs = self.encoder.embed_tokens(tokens)
+            logits = self.encoder.token_label_scores(token_embs, self.label_embs)
+            return sigmoid(logits), None
+        probs, span_reps = self._score_spans(tokens)
+        return self._apply_gazetteer(probs, text, starts, ends), span_reps
+
+    def _score_spans(self, tokens: Sequence[str]) -> Tuple[np.ndarray, Optional[np.ndarray]]:
         """Enumerate spans and score them against label embeddings.
 
-        Returns (probs (L,K,C), span_reps (L*K, D)). The prompt tokens
-        <<ENT>>/<<SEP>> are constructed (for structural parity with
-        processor.py:179-197) but the deterministic encoder consumes the
-        precomputed label embeddings directly — the bi-encoder dataflow.
+        Returns (probs (L,K,C), span_reps (L*K, D) or None on the
+        score-cache path). The deterministic encoder consumes the
+        precomputed label embeddings directly — the bi-encoder dataflow;
+        the <<ENT>>/<<SEP>> prompt (processor.py:179-197) is built only
+        for session feeds (onnx_backend.build_span_feed).
         """
         L = len(tokens)
         K = self.config.max_width
-        if self.is_session_backend and self.config.scoring != "gazetteer":
-            # ONNX route: prompt construction, subword tokenization,
-            # word masks and the span grid all happen inside
-            # build_span_feed; logits come back (L, K, C). Bi-encoder
-            # graphs additionally take the precomputed label matrix.
-            if getattr(self.encoder, "accepts_label_embeddings", False):
-                probs = self.encoder.span_probs(
-                    [tokens], self.labels, label_embeddings=self.label_embs
-                )[0]
-            else:
-                probs = self.encoder.span_probs([tokens], self.labels)[0]
-            return probs, np.zeros((L * K, 0))
-        # Structural parity: the prompt exists on the real-model path.
-        _prompted, _plen = build_entity_prompt(tokens, self.labels)
-        sidx = span_idx_array(L, K)
-        if self.config.scoring == "gazetteer":
+        cfg = self.config
+        if cfg.scoring == "gazetteer":
             # Dictionary-only mode: no encoder scores; spans light up via
             # _apply_gazetteer alone. Reps stay zero (relex patterns
             # drive adjacency in this mode).
-            return (
-                np.zeros((L, K, len(self.labels))),
-                np.zeros((L * K, self.config.dim)),
-            )
-        cfg = self.config
+            return np.zeros((L, K, len(self.labels))), np.zeros((L * K, cfg.dim))
+        sidx = span_idx_array(L, K)
         label_embs = self.label_embs
         contextual = (
             cfg.span_mode != "markerV0"
             or cfg.num_rnn_layers > 0
             or bool(cfg.post_fusion_schema)
         )
-        if contextual:
-            # contextual paths (alt span modes, M4 RNN smoothing, M9
-            # cross-fusion) depend on the whole token sequence →
-            # per-document compute, no pair cache
-            h = self.encoder.embed_tokens(tokens)
-            if cfg.num_rnn_layers > 0:
-                h = self.encoder.rnn_smooth(h, cfg.num_rnn_layers)
-            if cfg.post_fusion_schema:
-                label_embs, h = self.encoder.cross_fuse(
-                    label_embs, h, cfg.post_fusion_schema
-                )
-            span_reps = self.encoder.span_representations_mode(
-                h, sidx, K, cfg.span_mode
-            )
-        else:
+        if not contextual:
             # token-pair-keyed SCORE cache (Zipf vocabularies repeat
             # pairs heavily): a hit skips both the rep gather and the
             # score einsum; bit-identical to the uncached path. Span
@@ -340,11 +452,18 @@ class GLiNERPipeline:
             logits = self.encoder.score_spans_tokens(
                 tokens, sidx, label_embs, self._label_key
             )
-            probs = sigmoid(logits).reshape(L, K, len(self.labels))
-            return probs, None
+            return sigmoid(logits).reshape(L, K, len(self.labels)), None
+        # contextual paths (alt span modes, M4 RNN smoothing, M9
+        # cross-fusion) depend on the whole token sequence →
+        # per-document compute, no pair cache
+        h = self.encoder.embed_tokens(tokens)
+        if cfg.num_rnn_layers > 0:
+            h = self.encoder.rnn_smooth(h, cfg.num_rnn_layers)
+        if cfg.post_fusion_schema:
+            label_embs, h = self.encoder.cross_fuse(label_embs, h, cfg.post_fusion_schema)
+        span_reps = self.encoder.span_representations_mode(h, sidx, K, cfg.span_mode)
         logits = self.encoder.score_spans(span_reps, label_embs)  # (L*K, C)
-        probs = sigmoid(logits).reshape(L, K, len(self.labels))
-        return probs, span_reps
+        return sigmoid(logits).reshape(L, K, len(self.labels)), span_reps
 
     def _apply_gazetteer(
         self,
@@ -380,6 +499,108 @@ class GLiNERPipeline:
                         probs[s, k, pos] = 0.90 + h / 1000.0
         return probs
 
+    @staticmethod
+    def _confident_spans(probs: np.ndarray, tokens: Sequence[str], thr: float):
+        """Confident-span selection: valid spans whose max-class prob >
+        ``thr``, packed in ascending flat L*K order (base.py:2051-2074;
+        the generative keep rule, base.py:1356-1374, is the same).
+        Returns (packed flat indices, (E, 2) word spans, argmax label
+        index per span)."""
+        L, K, _C = probs.shape
+        flat_probs = probs.reshape(L * K, -1)
+        sidx = span_idx_array(L, K)
+        valid = sidx[:, 1] < len(tokens)  # span_mask
+        packed_idx = np.nonzero((flat_probs.max(axis=1) > thr) & valid)[0]
+        return packed_idx, sidx[packed_idx], flat_probs[packed_idx].argmax(axis=1)
+
+    @staticmethod
+    def _token_candidates(probs: np.ndarray, thr: float) -> np.ndarray:
+        """(E, 2) candidate spans proposed from the BIO flags
+        (extract_spans_from_tokens, modeling/utils.py:299-379): every
+        (start-flag, end-flag) pair of one class whose inside positions
+        are all flagged."""
+        return extract_spans_from_token_probs(
+            probs[:, :, 0], probs[:, :, 1], probs[:, :, 2], thr
+        )
+
+    def _relex_tail(self, tokens, cand, adj_thr, reps=None, label_idx=None):
+        """The relex tail over a packed candidate list (base.py:2216-2256):
+        adjacency (mode-dispatched, relations_layers.py:315-406) → all
+        directed pairs (i, j), i≠j, with prob > ``adj_thr`` in row-major
+        order (modeling/utils.py:209-296) → pair×relation scoring
+        (base.py:2243-2246). ``label_idx`` (span mode only) enables the
+        predicate patterns. Returns (rel_idx, rel_probs), None when no
+        pair is scored."""
+        E = len(cand)
+        if E < 2 or self.rel_embs is None or not len(self.rel_embs):
+            return None, None
+        if reps is None:
+            # score-cache path: build reps ONLY for the candidates
+            # (E ≪ L·K); same per-row math as the full matrix
+            reps = self.encoder.span_representations_tokens(tokens, cand)
+        adj = self.encoder.adjacency_probs(reps, self.config.relations_mode)
+        patterns = self.patterns if label_idx is not None else ()
+        if patterns:
+            # dependency-lite predicate patterns: a typed pair that
+            # matches any (head_label, *, tail_label) pattern AND sits
+            # within max_pattern_distance words is a confident
+            # adjacency candidate. Vectorized over the E×E grid
+            # (the reference's O(E²) Python loop is its bottleneck,
+            # modeling/utils.py:254-258 — SURVEY.md §4.3).
+            lab_arr = np.asarray(self.labels)[label_idx]
+            st, en = cand[:, 0], cand[:, 1]
+            # word gap: gap[i,j] = max(start_j - end_i, start_i - end_j)
+            gap_mat = np.maximum(st[None, :] - en[:, None], st[:, None] - en[None, :])
+            near_mat = gap_mat <= self.config.max_pattern_distance
+            typed = np.zeros((E, E), dtype=bool)
+            for h, _r, t in patterns:
+                typed |= (lab_arr[:, None] == h) & (lab_arr[None, :] == t)
+            np.fill_diagonal(typed, False)
+            adj = np.where(typed & near_mat, np.maximum(adj, 0.95), adj)
+        rows, cols = np.nonzero(~np.eye(E, dtype=bool))  # row-major (i, j), i != j
+        sel = adj[rows, cols] > adj_thr
+        pairs = np.stack([rows[sel], cols[sel]], axis=1)
+        if not len(pairs):
+            return None, None
+        # packed form: span-level projections once, pair-level adds
+        rel_probs = sigmoid(
+            self.encoder.pair_relation_logits_packed(reps, pairs, self.rel_embs)
+        )
+        if patterns:
+            hl = lab_arr[pairs[:, 0]]
+            tl = lab_arr[pairs[:, 1]]
+            near = near_mat[pairs[:, 0], pairs[:, 1]]
+            # __init__ keeps only patterns whose relation is known
+            rel_pos = {r: c for c, r in enumerate(self.relations)}
+            for h, r, t in patterns:
+                mask = near & (hl == h) & (tl == t)
+                c = rel_pos[r]
+                rel_probs[mask, c] = np.maximum(rel_probs[mask, c], 0.93)
+        return pairs, rel_probs
+
+    def _decode(
+        self, probs, tokens, text, starts, ends, thr,
+        input_spans=None, return_class_probs=False, id_to_class=None,
+    ):
+        """Stage 3 (entities): greedy decode of one document's scores →
+        (post-greedy spans, char-mapped entities). Token mode assembles
+        spans with the BIO min rule (decoder.py:975-1028);
+        ``input_spans`` are WORD spans (D9) and ``return_class_probs``
+        attaches the top-k per-class scores (D4) in both modes."""
+        cfg = self.config
+        id_to_class = self.id_to_class if id_to_class is None else id_to_class
+        kw = dict(
+            threshold=thr, flat_ner=cfg.flat_ner, multi_label=cfg.multi_label,
+            input_spans=input_spans, return_class_probs=return_class_probs,
+        )
+        if cfg.mode == "token":
+            spans = decode_token_scores(
+                probs[:, :, 0], probs[:, :, 1], probs[:, :, 2], id_to_class, **kw
+            )
+        else:
+            spans = decode_span_probs(probs, tokens, id_to_class, **kw)
+        return spans, map_spans_to_char(spans, text, starts, ends)
+
     # ------------------------------------------------------------------
     def predict_entities(
         self,
@@ -398,36 +619,92 @@ class GLiNERPipeline:
         ``return_class_probs`` attaches the top-k per-class
         probabilities per span (D4, decoder.py:159-188).
         """
-        if not isinstance(text, str) or not text.strip():
-            return []  # _filter_valid_texts (model.py:1222-1241)
-        thr = self.config.threshold if threshold is None else threshold
-        tokens, starts, ends = self._prepare(text, lang)
-        if not tokens:
-            return []
-        word_spans = self._to_word_spans(input_spans, starts, ends)
-        if self.config.mode == "token":
-            return self._predict_entities_token(
-                tokens,
-                text,
-                starts,
-                ends,
-                thr,
-                input_spans=word_spans,
-                return_class_probs=return_class_probs,
-            )
-        probs, _ = self._score_spans(tokens)
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
+        return self.predict_entities_batch(
+            [text], [lang], threshold=threshold, input_spans_list=[input_spans],
             return_class_probs=return_class_probs,
-            input_spans=word_spans,
-        )
-        return map_spans_to_char(spans, text, starts, ends)
+        )[0]
+
+    def predict_entities_batch(
+        self,
+        texts: Sequence[str],
+        langs: Optional[Sequence[str]] = None,
+        threshold: Optional[float] = None,
+        input_spans_list: Optional[Sequence] = None,
+        return_class_probs: bool = False,
+    ) -> List[List[Dict[str, Any]]]:
+        """Batched prediction — the ``_process_batches`` analog
+        (gliner/model.py:1333-1381).
+
+        Session (ONNX) backends run ONE ``session.run`` per sub-batch of
+        ``config.batch_size`` documents (or per token budget, see
+        ``configure_inference_packing``), documents length-sorted first;
+        see also plans/packing for the full block-diagonal variant.
+        Output order follows the input order and is identical to
+        per-document ``predict_entities`` calls.
+        """
+        thr = self._thresholds(threshold)[0]
+        spans_list = list(input_spans_list) if input_spans_list is not None else None
+        results: List[List[Dict[str, Any]]] = [[] for _ in texts]
+        prepared = self._prepare_batch(texts, langs)
+        for (i, tokens, starts, ends), probs, _ri, _rp in self._score_batch(prepared, texts):
+            word_spans = None
+            if spans_list is not None:
+                word_spans = self._to_word_spans(spans_list[i], starts, ends)
+            results[i] = self._decode(
+                probs, tokens, texts[i], starts, ends, thr, word_spans, return_class_probs
+            )[1]
+        return results
+
+    # ------------------------------------------------------------------
+    def predict_triples(
+        self, text: str, lang: str = "en", threshold: Optional[float] = None
+    ) -> Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]:
+        """(entities, relations) for one document; see
+        ``predict_triples_batch``."""
+        return self.predict_triples_batch([text], [lang], threshold=threshold)[0]
+
+    def predict_triples_batch(
+        self,
+        texts: Sequence[str],
+        langs: Optional[Sequence[str]] = None,
+        threshold: Optional[float] = None,
+    ) -> List[Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]]:
+        """(entities, relations) per document.
+
+        Mirrors UniEncoderSpanRelexGLiNER.inference (model.py:2404-2613):
+
+        1. span scoring as in entity mode;
+        2. confident-span selection: flat-index-ordered packed list of
+           valid spans whose max-class prob > threshold
+           (base.py:2051-2074) — in token mode the candidate list comes
+           from the BIO flags instead (UniEncoderTokenRelexGLiNER,
+           gliner/model.py:2902);
+        3. adjacency over the packed list, sigmoid, then all directed
+           pairs (i,j), i≠j, with prob > adjacency_threshold, in
+           row-major order (modeling/utils.py:209-296);
+        4. pair×relation scoring (base.py:2243-2246);
+        5. entity decode (greedy) + relation decode — head/tail indices
+           from the PRE-greedy packed list validated against the
+           POST-greedy span list (decoder.py:822, and by bounds check
+           only in token mode, decoder.py:1305-1310), ported verbatim.
+
+        Relex session backends run steps 2-4 in-graph, one
+        ``session.run`` per length-sorted sub-batch; a span-only session
+        (no relations) returns its entities and no relations.
+        """
+        thr, adj_thr, rel_thr = self._thresholds(threshold)
+        results: List[Tuple[list, list]] = [([], []) for _ in texts]
+        prepared = self._prepare_batch(texts, langs)
+        for (i, tokens, starts, ends), probs, rel_idx, rel_probs in self._score_batch(
+            prepared, texts, relex=True, thr=thr, adj_thr=adj_thr
+        ):
+            text = texts[i]
+            spans, entities = self._decode(probs, tokens, text, starts, ends, thr)
+            rel_tuples = decode_relations(
+                spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
+            )
+            results[i] = (entities, format_relations(rel_tuples, spans, text, starts, ends))
+        return results
 
     # ------------------------------------------------------------------
     def _generative_decoder(self, constraints):
@@ -472,38 +749,54 @@ class GLiNERPipeline:
           id_to_classes (decoder.py:415-444); entities carry the
           generated name as their ``label``.
 
+        Token mode is the token-decoder family
+        (UniEncoderTokenDecoderGLiNER, gliner/model.py:2346-2358; model
+        side base.py:1608-1900; decode side TokenGenerativeDecoder,
+        decoder.py:1427-1533): candidate spans are proposed FROM the BIO
+        token flags (the span grid is never enumerated) and re-scored
+        against the label embeddings (``span_logits =
+        einsum('BND,BCD->BNC')``, base.py:1836); entity decode runs over
+        THESE span probs, not the BIO min rule; the decoder keeps
+        candidates with ``sigmoid(span_logits).max(-1) > 0.5`` — the
+        reference HARD-CODES 0.5 here (base.py:1700-1702), independent
+        of the user threshold (upstream also writes ``& span_mask.bool``
+        without calling it — our candidate list is packed so the mask is
+        all-true) — and generated labels attach by CANDIDATE POSITION
+        (decoder.py:1490-1531) before greedy overlap resolution.
+
         ``gen_constraints`` builds the labels trie (model.py:2107-2131)
         so every generated string is a member of the constraint set.
         This family is ONNX-incompatible in the reference too
         (model.py:2322-2345) — session backends are rejected.
         """
+        from ..kernel.decoding import decode_candidate_span_probs
+        from .generative import build_span_label_map, updated_id_to_classes
+
         if self.is_session_backend:
             raise NotImplementedError(
                 "generative label decoding is ONNX-incompatible "
                 "(reference model.py:2322-2345 raises on export); use the "
                 "deterministic bi-encoder backend"
             )
-        if not isinstance(text, str) or not text.strip():
+        prepared = self._prepare_batch([text], [lang])
+        if not prepared:
             return []
-        thr = self.config.threshold if threshold is None else threshold
-        tokens, starts, ends = self._prepare(text, lang)
-        if not tokens:
-            return []
-        if self.config.mode == "token":
-            return self._predict_entities_generative_token(
-                tokens, text, starts, ends, thr,
-                decoder_mode=decoder_mode,
-                gen_constraints=gen_constraints,
-                num_gen_sequences=num_gen_sequences,
-                max_new_tokens=max_new_tokens,
-            )
-        probs, span_reps = self._score_spans(tokens)
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        L, K, _C = probs.shape
+        thr = self._thresholds(threshold)[0]
+        _i, tokens, starts, ends = prepared[0]
+        probs, span_reps = self._score_doc(tokens, text, starts, ends)
+        token_mode = self.config.mode == "token"
+        if token_mode:
+            cand = self._token_candidates(probs, thr)
+            if len(cand) == 0:
+                return []
+            cand_reps = self.encoder.span_representations_tokens(tokens, cand)
+            span_probs = sigmoid(
+                self.encoder.score_spans(cand_reps, self.label_embs)
+            )  # (E, C)
+            keep_idx = np.nonzero(span_probs.max(axis=1) > 0.5)[0]  # base.py:1702
+        else:
+            keep_idx, kept_spans, _label_idx = self._confident_spans(probs, tokens, thr)
         dec = self._generative_decoder(gen_constraints)
-
-        from .generative import build_span_label_map, updated_id_to_classes
-
         id_to_class = self.id_to_class
         span_label_map: Dict[int, List[str]] = {}
         if decoder_mode == "prompt":
@@ -517,144 +810,49 @@ class GLiNERPipeline:
             )
             id_to_class = updated_id_to_classes(self.id_to_class, gen)
         elif decoder_mode == "span":
-            flat_probs = probs.reshape(L * K, -1)
-            sidx = span_idx_array(L, K)
-            valid = sidx[:, 1] < len(tokens)
-            keep = (flat_probs.max(axis=1) > thr) & valid
-            packed_idx = np.nonzero(keep)[0]  # flat packing order
-            if len(packed_idx):
-                if span_reps is None:
-                    packed_reps = self.encoder.span_representations_tokens(
-                        tokens, sidx[packed_idx]
-                    )
+            if len(keep_idx):
+                if token_mode:
+                    kept_reps = cand_reps[keep_idx]
+                elif span_reps is None:
+                    kept_reps = self.encoder.span_representations_tokens(tokens, kept_spans)
                 else:
-                    packed_reps = span_reps[packed_idx]
+                    kept_reps = span_reps[keep_idx]
                 gen = dec.generate_labels(
-                    packed_reps,
+                    kept_reps,
                     constraints=gen_constraints,
                     num_return_sequences=num_gen_sequences,
                     max_new_tokens=max_new_tokens,
                 )
-                span_label_map = build_span_label_map(
-                    packed_idx, gen, num_gen_sequences
-                )
+                span_label_map = build_span_label_map(keep_idx, gen, num_gen_sequences)
         else:
             raise ValueError(f"unknown decoder_mode: {decoder_mode!r}")
 
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        if decoder_mode == "span":
+        if token_mode:
+            spans = decode_candidate_span_probs(
+                span_probs,
+                cand,
+                id_to_class,
+                span_label_map=span_label_map,
+                threshold=thr,
+                flat_ner=self.config.flat_ner,
+                multi_label=self.config.multi_label,
+            )
+            entities = map_spans_to_char(spans, text, starts, ends)
+            generated = [span.generated_labels for span in spans]
+        else:
+            spans, entities = self._decode(
+                probs, tokens, text, starts, ends, thr, id_to_class=id_to_class
+            )
             # flat_idx = start * K + width addresses the pre-greedy
             # packed list (decoder.py:492-527 _build_span_tuple)
-            for span, ent in zip(spans, entities):
-                flat_idx = span.start * K + (span.end - span.start)
-                labels = span_label_map.get(flat_idx)
-                if labels is not None:
-                    ent["generated_labels"] = labels
-        return entities
-
-    def _predict_entities_generative_token(
-        self,
-        tokens,
-        text,
-        starts,
-        ends,
-        thr,
-        decoder_mode: str = "span",
-        gen_constraints: Optional[Sequence[str]] = None,
-        num_gen_sequences: int = 1,
-        max_new_tokens: int = 15,
-    ) -> List[Dict[str, Any]]:
-        """Token-mode generative family (UniEncoderTokenDecoderGLiNER,
-        gliner/model.py:2346-2358; model side base.py:1608-1900; decode
-        side TokenGenerativeDecoder, decoder.py:1427-1533):
-
-        1. BIO token scoring → (W, C, 3) probs (M7);
-        2. candidate spans proposed FROM the token flags
-           (extract_spans_from_tokens, modeling/utils.py:299-379 — the
-           span grid is never enumerated);
-        3. candidate reps re-scored against the label embeddings
-           (``span_logits = einsum('BND,BCD->BNC')``, base.py:1836) —
-           entity decode in this family runs over THESE span probs,
-           not the BIO min rule;
-        4. decoder input selection keeps candidates with
-           ``sigmoid(span_logits).max(-1) > 0.5`` — the reference
-           HARD-CODES 0.5 here (base.py:1700-1702), independent of the
-           user threshold (upstream also writes ``& span_mask.bool``
-           without calling it — our candidate list is packed so the
-           mask is all-true and the intended semantics are unambiguous);
-        5. ``num_gen_sequences`` labels generate per kept span,
-           attached by CANDIDATE POSITION (decoder.py:1490-1531), then
-           greedy overlap resolution runs over the tuples.
-
-        ``decoder_mode="prompt"`` generates one name per prompt class
-        and substitutes it into id_to_classes (decoder.py:1486-1488) —
-        entities carry the generated name as their ``label``.
-        """
-        from ..kernel.decoding import (
-            decode_candidate_span_probs,
-            extract_spans_from_token_probs,
-        )
-        from .generative import build_span_label_map, updated_id_to_classes
-
-        token_embs = self.encoder.embed_tokens(tokens)
-        logits = self.encoder.token_label_scores(token_embs, self.label_embs)
-        tp = sigmoid(logits)  # (W, C, 3)
-        cand = extract_spans_from_token_probs(
-            tp[:, :, 0], tp[:, :, 1], tp[:, :, 2], thr
-        )
-        if len(cand) == 0:
-            return []
-        cand_reps = self.encoder.span_representations_tokens(tokens, cand)
-        span_probs = sigmoid(
-            self.encoder.score_spans(cand_reps, self.label_embs)
-        )  # (E, C)
-        dec = self._generative_decoder(gen_constraints)
-        id_to_class = self.id_to_class
-        span_label_map: Dict[int, List[str]] = {}
-        if decoder_mode == "prompt":
-            gen = dec.generate_labels(
-                self.label_embs,
-                constraints=gen_constraints,
-                num_return_sequences=1,
-                max_new_tokens=max_new_tokens,
-            )
-            id_to_class = updated_id_to_classes(self.id_to_class, gen)
-        elif decoder_mode == "span":
-            keep = span_probs.max(axis=1) > 0.5  # hard-coded (base.py:1702)
-            sel = np.nonzero(keep)[0]
-            if len(sel):
-                gen = dec.generate_labels(
-                    cand_reps[sel],
-                    constraints=gen_constraints,
-                    num_return_sequences=num_gen_sequences,
-                    max_new_tokens=max_new_tokens,
-                )
-                span_label_map = build_span_label_map(
-                    sel, gen, num_gen_sequences
-                )
-        else:
-            raise ValueError(f"unknown decoder_mode: {decoder_mode!r}")
-        spans = decode_candidate_span_probs(
-            span_probs,
-            cand,
-            id_to_class,
-            span_label_map=span_label_map,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        for span, ent in zip(spans, entities):
-            if span.generated_labels is not None:
-                ent["generated_labels"] = span.generated_labels
+            K = probs.shape[1]
+            generated = [
+                span_label_map.get(span.start * K + (span.end - span.start))
+                for span in spans
+            ]
+        for ent, labels in zip(entities, generated):
+            if labels is not None:
+                ent["generated_labels"] = labels
         return entities
 
     @staticmethod
@@ -670,493 +868,3 @@ class GLiNERPipeline:
             for cs, ce in input_spans
             if cs in start_map and ce in end_map  # silent drop (P6)
         ]
-
-    def predict_entities_batch(
-        self,
-        texts: Sequence[str],
-        langs: Optional[Sequence[str]] = None,
-        threshold: Optional[float] = None,
-        input_spans_list: Optional[Sequence] = None,
-        return_class_probs: bool = False,
-    ) -> List[List[Dict[str, Any]]]:
-        """Batched prediction — the ``_process_batches`` analog
-        (gliner/model.py:1333-1381).
-
-        Session (ONNX) backends run ONE ``session.run`` per sub-batch of
-        ``config.batch_size`` documents, with documents length-sorted
-        first so each padded batch is length-homogeneous (the cheap 80%
-        of the reference's packing win, infer_packing.py:164-208; see
-        also plans/packing for the full block-diagonal variant). Output
-        order follows the input order and is identical to per-document
-        ``predict_entities`` calls.
-        """
-        n = len(texts)
-        lang_list = list(langs) if langs is not None else ["en"] * n
-        spans_list = (
-            list(input_spans_list) if input_spans_list is not None else [None] * n
-        )
-        batched = (
-            self.is_session_backend
-            and self.config.scoring != "gazetteer"
-            and self.config.mode == "span"
-        )
-        if not batched:
-            return [
-                self.predict_entities(
-                    t,
-                    lg or "en",
-                    threshold=threshold,
-                    input_spans=sp,
-                    return_class_probs=return_class_probs,
-                )
-                for t, lg, sp in zip(texts, lang_list, spans_list)
-            ]
-        thr = self.config.threshold if threshold is None else threshold
-        prepared = []  # (orig_idx, tokens, starts, ends)
-        for i, (t, lg) in enumerate(zip(texts, lang_list)):
-            if isinstance(t, str) and t.strip():
-                tokens, starts, ends = self._prepare(t, lg or "en")
-                if tokens:
-                    prepared.append((i, tokens, starts, ends))
-        results: List[List[Dict[str, Any]]] = [[] for _ in range(n)]
-        order = sorted(range(len(prepared)), key=lambda j: -len(prepared[j][1]))
-        for idx_chunk in self._session_chunks(order, prepared):
-            chunk = [prepared[j] for j in idx_chunk]
-            if getattr(self.encoder, "accepts_label_embeddings", False):
-                probs_list = self.encoder.span_probs(
-                    [c[1] for c in chunk], self.labels,
-                    label_embeddings=self.label_embs,
-                )
-            else:
-                probs_list = self.encoder.span_probs(
-                    [c[1] for c in chunk], self.labels
-                )
-            for (i, tokens, starts, ends), probs in zip(chunk, probs_list):
-                text = texts[i]
-                probs = self._apply_gazetteer(probs, text, starts, ends)
-                spans = decode_span_probs(
-                    probs,
-                    tokens,
-                    self.id_to_class,
-                    threshold=thr,
-                    flat_ner=self.config.flat_ner,
-                    multi_label=self.config.multi_label,
-                    return_class_probs=return_class_probs,
-                    input_spans=self._to_word_spans(spans_list[i], starts, ends),
-                )
-                results[i] = map_spans_to_char(spans, text, starts, ends)
-        return results
-
-    def _predict_entities_token(
-        self,
-        tokens,
-        text,
-        starts,
-        ends,
-        thr,
-        input_spans=None,
-        return_class_probs=False,
-    ):
-        """Token-mode path: (W,C,3) start/end/inside probabilities →
-        span assembly with the min-score rule (decoder.py:975-1028).
-
-        ``input_spans`` are WORD spans (already converted by the caller)
-        and restrict decoding exactly like span mode (D9).
-        ``return_class_probs`` attaches per-class min-rule span scores —
-        the token-mode analog of D4 (the reference's TokenDecoder has no
-        top-k path of its own; this extends the contract uniformly).
-        """
-        from ..kernel.decoding import decode_token_scores
-
-        if hasattr(self.encoder, "token_probs"):
-            # token-mode ONNX graph (OnnxTokenEncoder): (W, C, 3) probs;
-            # bi-encoder token graphs additionally ride the precomputed
-            # label matrix (BiEncoderTokenGLiNER, model.py:2033-2070)
-            if getattr(self.encoder, "accepts_label_embeddings", False):
-                probs = self.encoder.token_probs(
-                    [tokens], self.labels, label_embeddings=self.label_embs
-                )[0]
-            else:
-                probs = self.encoder.token_probs([tokens], self.labels)[0]
-        elif not hasattr(self.encoder, "token_label_scores"):
-            raise ValueError(
-                "token mode needs a token-scoring backend (DeterministicEncoder "
-                "or OnnxTokenEncoder); a span-mode ONNX session cannot produce "
-                "(W,C,3) start/end/inside scores — export the token-mode graph "
-                "(gliner/model.py:1941-1989)"
-            )
-        else:
-            token_embs = self.encoder.embed_tokens(tokens)
-            logits = self.encoder.token_label_scores(token_embs, self.label_embs)
-            probs = sigmoid(logits)  # (W, C, 3)
-        spans = decode_token_scores(
-            probs[:, :, 0],
-            probs[:, :, 1],
-            probs[:, :, 2],
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-            input_spans=input_spans,
-            return_class_probs=return_class_probs,
-        )
-        return map_spans_to_char(spans, text, starts, ends)
-
-    # ------------------------------------------------------------------
-    def predict_triples(
-        self, text: str, lang: str = "en", threshold: Optional[float] = None
-    ) -> Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]:
-        """(entities, relations) for one document.
-
-        Mirrors UniEncoderSpanRelexGLiNER.inference (model.py:2404-2613):
-
-        1. span scoring as in entity mode;
-        2. confident-span selection: flat-index-ordered packed list of
-           valid spans whose max-class prob > threshold
-           (base.py:2051-2074);
-        3. bilinear adjacency over the packed list, sigmoid, then all
-           directed pairs (i,j), i≠j, with prob > adjacency_threshold,
-           in row-major order (modeling/utils.py:209-296);
-        4. pair×relation scoring (base.py:2243-2246);
-        5. entity decode (greedy) + relation decode — head/tail indices
-           from the PRE-greedy packed list validated against the
-           POST-greedy span list (decoder.py:822), ported verbatim.
-        """
-        if not isinstance(text, str) or not text.strip():
-            return [], []
-        cfg = self.config
-        thr = cfg.threshold if threshold is None else threshold
-        adj_thr = cfg.adjacency_threshold if cfg.adjacency_threshold is not None else thr
-        rel_thr = cfg.relation_threshold if cfg.relation_threshold is not None else thr
-
-        tokens, starts, ends = self._prepare(text, lang)
-        if not tokens:
-            return [], []
-        if cfg.mode == "token":
-            # token-mode joint relex (UniEncoderTokenRelexGLiNER,
-            # gliner/model.py:2902): BIO token scoring proposes the
-            # candidate-span list, the relex tail runs over it
-            if self.is_session_backend:
-                return self._predict_triples_token_session(
-                    tokens, text, starts, ends, thr, rel_thr
-                )
-            return self._predict_triples_token(
-                tokens, text, starts, ends, thr, adj_thr, rel_thr
-            )
-        if self.is_session_backend and self.config.scoring != "gazetteer":
-            return self._predict_triples_session(
-                tokens, text, starts, ends, thr, rel_thr
-            )
-        _prompted, _plen = build_relex_prompt(tokens, self.labels, self.relations)
-
-        probs, span_reps = self._score_spans(tokens)
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        L, K, _ = probs.shape
-
-        # --- step 2: confident-span selection (flat index order) ---
-        flat_probs = probs.reshape(L * K, -1)
-        sidx = span_idx_array(L, K)
-        valid = sidx[:, 1] < len(tokens)  # span_mask
-        keep = (flat_probs.max(axis=1) > thr) & valid
-        packed_idx = np.nonzero(keep)[0]  # ascending flat order = packed order
-        if span_reps is None:
-            # score-cache path: build reps ONLY for the confident spans
-            # (E ≪ L·K); same per-row math as the full matrix
-            packed_reps = self.encoder.span_representations_tokens(
-                tokens, sidx[packed_idx]
-            )
-        else:
-            packed_reps = span_reps[packed_idx]
-        E = len(packed_idx)
-
-        rel_idx = None
-        rel_probs = None
-        if E >= 2 and self.rel_embs is not None and len(self.rel_embs):
-            # argmax entity label per packed span (for predicate patterns)
-            packed_labels = [
-                self.labels[int(c)] for c in flat_probs[packed_idx].argmax(axis=1)
-            ]
-            # --- step 3: adjacency + directed pairs (mode-dispatched,
-            # relations_layers.py:315-406; bilinear = default) ---
-            adj = self.encoder.adjacency_probs(packed_reps, self.config.relations_mode)
-            packed_spans = sidx[packed_idx]  # (E, 2) word positions
-            # Vectorized word-gap matrix (shared by adjacency + rel
-            # boosts): gap[i,j] = max(start_j - end_i, start_i - end_j).
-            st, en = packed_spans[:, 0], packed_spans[:, 1]
-            gap_mat = np.maximum(st[None, :] - en[:, None], st[:, None] - en[None, :])
-            lab_arr = np.array(packed_labels)
-            if self.patterns:
-                # dependency-lite predicate patterns: a typed pair that
-                # matches any (head_label, *, tail_label) pattern AND sits
-                # within max_pattern_distance words is a confident
-                # adjacency candidate. Vectorized over the E×E grid
-                # (the reference's O(E²) Python loop is its bottleneck,
-                # modeling/utils.py:254-258 — SURVEY.md §4.3).
-                maxd = self.config.max_pattern_distance
-                typed = np.zeros((E, E), dtype=bool)
-                for h, _r, t in self.patterns:
-                    typed |= (lab_arr[:, None] == h) & (lab_arr[None, :] == t)
-                np.fill_diagonal(typed, False)
-                boost = typed & (gap_mat <= maxd)
-                adj = np.where(boost, np.maximum(adj, 0.95), adj)
-            rows, cols = np.nonzero(~np.eye(E, dtype=bool))  # row-major (i, j), i != j
-            sel = adj[rows, cols] > adj_thr
-            pairs = np.stack([rows[sel], cols[sel]], axis=1)
-            if len(pairs):
-                # --- step 4: pair×relation scoring (packed form:
-                # span-level projections once, pair-level adds) ---
-                rel_logits = self.encoder.pair_relation_logits_packed(
-                    packed_reps, pairs, self.rel_embs
-                )
-                rel_idx = pairs
-                rel_probs = sigmoid(rel_logits)
-                if self.patterns:
-                    maxd = self.config.max_pattern_distance
-                    hl = lab_arr[pairs[:, 0]]
-                    tl = lab_arr[pairs[:, 1]]
-                    near = gap_mat[pairs[:, 0], pairs[:, 1]] <= maxd
-                    rel_pos = {r: c for c, r in enumerate(self.relations)}
-                    for h, r, t in self.patterns:
-                        c = rel_pos.get(r)
-                        if c is None:
-                            # pattern names an unknown relation: ignore
-                            # (matches the pre-vectorization behavior —
-                            # never KeyError inside the executor UDF)
-                            continue
-                        mask = near & (hl == h) & (tl == t)
-                        rel_probs[mask, c] = np.maximum(rel_probs[mask, c], 0.93)
-
-        # --- step 5: decode ---
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=cfg.flat_ner,
-            multi_label=cfg.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def _predict_triples_session(self, tokens, text, starts, ends, thr, rel_thr):
-        """ONNX relex route: the graph itself runs confident-span
-        selection, adjacency and pair scoring (export wrapper,
-        gliner/model.py:2871-2900); here we only decode its four
-        outputs, preserving the pre-greedy/post-greedy index-alignment
-        quirk (decoder.py:822). The in-graph selection threshold is the
-        export default (the exported forward signature takes no
-        threshold input), matching the reference's ONNX reality.
-        """
-        probs, rel_idx, rel_probs = self.encoder.relex_outputs(
-            [tokens], self.labels, self.relations
-        )[0]
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def _predict_triples_token(
-        self, tokens, text, starts, ends, thr, adj_thr, rel_thr
-    ):
-        """Token-mode joint relex, deterministic-analog backend
-        (UniEncoderTokenRelexGLiNER, gliner/model.py:2902).
-
-        1. BIO token scoring → (W, C, 3) start/end/inside probs (M7);
-        2. candidate-span proposal from the BIO flags — NOT the L×K
-           enumeration grid (extract_spans_from_tokens,
-           modeling/utils.py:299-379 via the represent_spans override,
-           base.py:2497-2514): every (start-flag, end-flag) pair of one
-           class whose inside positions are all flagged;
-        3. the SPAN-relex tail over the candidate list: adjacency +
-           all directed pairs over adjacency_threshold in row-major
-           order + pair×relation scoring (base.py:2216-2256);
-        4. TokenRelexDecoder.decode (decoding/decoder.py:1325-1427):
-           entity assembly with the BIO min rule, then relation decode
-           validating rel_idx — candidate-list indices — against the
-           POST-greedy span list by bounds check only (the same
-           index-alignment quirk as span mode, decoder.py:1305-1310).
-        """
-        from ..kernel.decoding import (
-            decode_token_scores,
-            extract_spans_from_token_probs,
-        )
-
-        cfg = self.config
-        token_embs = self.encoder.embed_tokens(tokens)
-        logits = self.encoder.token_label_scores(token_embs, self.label_embs)
-        probs = sigmoid(logits)  # (W, C, 3)
-        cand = extract_spans_from_token_probs(
-            probs[:, :, 0], probs[:, :, 1], probs[:, :, 2], thr
-        )
-        rel_idx = None
-        rel_probs = None
-        if len(cand) >= 2 and self.rel_embs is not None and len(self.rel_embs):
-            cand_reps = self.encoder.span_representations_tokens(tokens, cand)
-            adj = self.encoder.adjacency_probs(cand_reps, cfg.relations_mode)
-            E = len(cand)
-            rows, cols = np.nonzero(~np.eye(E, dtype=bool))  # row-major (i, j)
-            sel = adj[rows, cols] > adj_thr
-            pairs = np.stack([rows[sel], cols[sel]], axis=1)
-            if len(pairs):
-                rel_logits = self.encoder.pair_relation_logits_packed(
-                    cand_reps, pairs, self.rel_embs
-                )
-                rel_idx = pairs
-                rel_probs = sigmoid(rel_logits)
-        spans = decode_token_scores(
-            probs[:, :, 0],
-            probs[:, :, 1],
-            probs[:, :, 2],
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=cfg.flat_ner,
-            multi_label=cfg.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def _predict_triples_token_session(
-        self, tokens, text, starts, ends, thr, rel_thr
-    ):
-        """Token-relex ONNX route: the exported graph emits
-        logits/rel_idx/rel_logits/rel_mask with NO span grid in the
-        declared inputs (UniEncoderTokenRelexGLiNER._get_onnx_input_spec,
-        gliner/model.py:2916-2952); candidate proposal, adjacency and
-        pair scoring run IN-GRAPH at the export-default thresholds.
-        Here we only decode the four outputs (TokenRelexDecoder
-        semantics, incl. the index-alignment quirk)."""
-        from ..kernel.decoding import decode_token_scores
-
-        if not hasattr(self.encoder, "token_relex_outputs"):
-            raise ValueError(
-                "token-mode triples on a session backend need a token-relex "
-                "graph (logits/rel_idx/rel_logits/rel_mask, no span grid — "
-                "gliner/model.py:2916-2952); this session exports "
-                f"{type(self.encoder).__name__} outputs only"
-            )
-        probs, rel_idx, rel_probs = self.encoder.token_relex_outputs(
-            [tokens], self.labels, self.relations
-        )[0]
-        spans = decode_token_scores(
-            probs[:, :, 0],
-            probs[:, :, 1],
-            probs[:, :, 2],
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def predict_triples_batch(
-        self,
-        texts: Sequence[str],
-        langs: Optional[Sequence[str]] = None,
-        threshold: Optional[float] = None,
-    ) -> List[Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]]:
-        """Batched triples — one ``session.run`` per length-sorted
-        sub-batch on relex session backends, per-doc otherwise."""
-        n = len(texts)
-        lang_list = list(langs) if langs is not None else ["en"] * n
-        token_mode = self.config.mode == "token"
-        if token_mode:
-            batched = self.is_session_backend and hasattr(
-                self.encoder, "token_relex_outputs"
-            )
-        else:
-            batched = (
-                self.is_session_backend
-                and self.config.scoring != "gazetteer"
-                and getattr(self.encoder, "supports_relations", False)
-            )
-        if not batched:
-            return [
-                self.predict_triples(t, lg or "en", threshold=threshold)
-                for t, lg in zip(texts, lang_list)
-            ]
-        cfg = self.config
-        thr = cfg.threshold if threshold is None else threshold
-        rel_thr = cfg.relation_threshold if cfg.relation_threshold is not None else thr
-        prepared = []
-        for i, (t, lg) in enumerate(zip(texts, lang_list)):
-            if isinstance(t, str) and t.strip():
-                tokens, starts, ends = self._prepare(t, lg or "en")
-                if tokens:
-                    prepared.append((i, tokens, starts, ends))
-        results: List[Tuple[list, list]] = [([], []) for _ in range(n)]
-        order = sorted(range(len(prepared)), key=lambda j: -len(prepared[j][1]))
-        from ..kernel.decoding import decode_token_scores
-
-        for idx_chunk in self._session_chunks(order, prepared):
-            chunk = [prepared[j] for j in idx_chunk]
-            run = (
-                self.encoder.token_relex_outputs
-                if token_mode
-                else self.encoder.relex_outputs
-            )
-            outs = run([c[1] for c in chunk], self.labels, self.relations)
-            for (i, tokens, starts, ends), (probs, rel_idx, rel_probs) in zip(
-                chunk, outs
-            ):
-                text = texts[i]
-                if token_mode:
-                    spans = decode_token_scores(
-                        probs[:, :, 0],
-                        probs[:, :, 1],
-                        probs[:, :, 2],
-                        self.id_to_class,
-                        threshold=thr,
-                        flat_ner=cfg.flat_ner,
-                        multi_label=cfg.multi_label,
-                    )
-                    rel_tuples = decode_relations(
-                        spans, rel_idx, rel_probs, None,
-                        self.rel_id_to_class, threshold=rel_thr,
-                    )
-                    results[i] = (
-                        map_spans_to_char(spans, text, starts, ends),
-                        format_relations(rel_tuples, spans, text, starts, ends),
-                    )
-                    continue
-                probs = self._apply_gazetteer(probs, text, starts, ends)
-                spans = decode_span_probs(
-                    probs,
-                    tokens,
-                    self.id_to_class,
-                    threshold=thr,
-                    flat_ner=cfg.flat_ner,
-                    multi_label=cfg.multi_label,
-                )
-                rel_tuples = decode_relations(
-                    spans, rel_idx, rel_probs, None,
-                    self.rel_id_to_class, threshold=rel_thr,
-                )
-                results[i] = (
-                    map_spans_to_char(spans, text, starts, ends),
-                    format_relations(rel_tuples, spans, text, starts, ends),
-                )
-        return results

@@ -339,3 +339,19 @@ def test_golden_route(name, golden_docs):
 
 def test_golden_covers_every_route():
     assert set(GOLDEN) == set(_golden_routes())
+
+
+def test_span_only_session_triples_are_entities_only():
+    """A span-only session graph with no relations returns its entities
+    and no relations, per document and batched, like the deterministic
+    backend does."""
+    from gliner_spark.model.ort_testing import fake_span_encoder_factory
+
+    pipe = GLiNERPipeline(
+        LABELS, [], PipelineConfig(threshold=0.5), encoder=fake_span_encoder_factory()
+    )
+    texts = [TEXT, "", "Mary Jones leads the Paris office of Globex."]
+    want = [(pipe.predict_entities(t), []) for t in texts]
+    assert any(ents for ents, _ in want)
+    assert [pipe.predict_triples(t) for t in texts] == want
+    assert pipe.predict_triples_batch(texts) == want
