@@ -403,8 +403,9 @@ class GLiNERPipeline:
             else:
                 outs = [(p, None, None) for p in run(batch, self.labels)]
             for item, (probs, rel_idx, rel_probs) in zip(chunk, outs):
+                i, _tokens, starts, ends = item
                 if span_mode:
-                    probs = self._apply_gazetteer(probs, texts[item[0]], item[2], item[3])
+                    probs = self._apply_gazetteer(probs, texts[i], starts, ends)
                 yield item, probs, rel_idx, rel_probs
 
     def _score_doc(self, tokens, text, starts, ends):

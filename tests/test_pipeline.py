@@ -1,8 +1,6 @@
 """End-to-end pipeline kernel tests (no Spark): determinism, shape,
 invariants, relex dataflow."""
 
-import functools
-
 import pytest
 
 from gliner_spark.model.pipeline import GLiNERPipeline, PipelineConfig
@@ -165,7 +163,6 @@ class TestTokenModeArgThreading:
 # ---------------------------------------------------------------------------
 
 
-@functools.lru_cache(maxsize=None)
 def _golden_routes():
     """name -> (kind, pipeline kwargs, call kwargs) for every extraction
     route: the 16 rows-only extraction gates of ``__spark_entry__``
@@ -274,6 +271,11 @@ GOLDEN = {
 
 
 @pytest.fixture(scope="module")
+def golden_routes():
+    return _golden_routes()
+
+
+@pytest.fixture(scope="module")
 def golden_docs():
     import pandas as pd
 
@@ -296,11 +298,11 @@ def _input_spans(text):
     return spans
 
 
-def _golden_run(name, docs):
+def _golden_run(route, docs):
     import hashlib
     import json
 
-    kind, pipe_kw, call = _golden_routes()[name]
+    kind, pipe_kw, call = route
     pipe = GLiNERPipeline(**pipe_kw)
     call = dict(call)
     if kind == "generative":
@@ -327,18 +329,18 @@ def _golden_run(name, docs):
 
 
 @pytest.mark.parametrize("name", sorted(GOLDEN))
-def test_golden_route(name, golden_docs):
+def test_golden_route(name, golden_routes, golden_docs):
     """Every extraction route's absolute output over 100 documents is
     pinned (floats included, through repr), and per-document calls
     equal batched calls row for row."""
-    digest, rows, out, batch = _golden_run(name, golden_docs)
+    digest, rows, out, batch = _golden_run(golden_routes[name], golden_docs)
     assert (digest, rows) == GOLDEN[name]
     if batch is not None:
         assert batch == out
 
 
-def test_golden_covers_every_route():
-    assert set(GOLDEN) == set(_golden_routes())
+def test_golden_covers_every_route(golden_routes):
+    assert set(GOLDEN) == set(golden_routes)
 
 
 def test_span_only_session_triples_are_entities_only():
