@@ -1,13 +1,21 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry``    — flagship KG-construction query on sf0.001.
-``queries``  — one entry per implemented operator (SURVEY.md §2 +
-               training-data-pipeline ops), each (spark, sf_dir) → DataFrame.
-``oracle_sql`` — DuckDB-runnable ANSI SQL mirrors. Queries built on the
-closed-form operator modes (gazetteer scoring, md5 hashing, int/int
-similarity math) have exact SQL oracles; the zero-shot encoder paths
-(learned-weight analog) are rows-only checked, as are the UDF-backed
-multimodal stubs.
+``entry``      — flagship KG-construction query on sf0.001.
+``queries``    — one gate per implemented operator (SURVEY.md §2 +
+                 training-data-pipeline ops), each (spark, sf_dir) →
+                 DataFrame; every exact-oracle gate precedes every
+                 rows-only gate.
+``oracle_sql`` — DuckDB-runnable SQL mirrors of the exact-oracle gates,
+                 built on closed-form operator modes (gazetteer scoring,
+                 md5 hashing, int/int similarity math).
+
+The rows-only gates are learned-weight analogs no SQL can mirror. Sixteen
+are the extraction model families (SURVEY §0): they run one prepare →
+score → decode kernel and differ only in configuration, so each is a row
+of ``KERNEL_GATES`` that ``_kernel_query`` turns into a gate, and the
+same rows build their kernel oracle (tests/test_kernel_oracle.py) and
+golden digests (tests/test_pipeline.py). The seventeenth,
+``kg_triples_kge_ranked``, is a function.
 
 Determinism rules shared by both sides (see gliner_spark.functions):
 hashes are md5 hex; all float outputs are single IEEE ops on ints or
@@ -17,6 +25,7 @@ literals (no float aggregations); ranks total-order on (score, id).
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,6 +42,8 @@ from gliner_spark.functions.text import (
     top_terms,
     word_count,
 )
+from gliner_spark.model import ort_testing as ort
+from gliner_spark.model.encoder import get_encoder
 from gliner_spark.operators.canonicalize import connected_components
 from gliner_spark.operators.dedup import (
     duplicated_spans,
@@ -297,267 +308,134 @@ def _gold_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared(spark, sf_dir, "gold_entities", build)
 
 
-def q_kg_entities_zeroshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shot path (deterministic-encoder weights) — rows-only check."""
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.5, lang_col=None
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
+# ---------------------------------------------------------------------------
+# Rows-only extraction gates: one table row per model family
+# ---------------------------------------------------------------------------
+
+_ENT_COLS = ("doc_id", "start", "end", "text", "label", "score")
+_GEN_COLS = (*_ENT_COLS, "gen_labels")
+_TRIPLE_COLS = ("doc_id", "subj_text", "pred", "obj_text", "score")
+_GAZ_PAT = dict(gazetteer=GAZ_FULL, patterns=PATTERNS)
+_GEN = dict(gen_constraints=GEN_CONSTRAINTS, num_gen_sequences=2)
+_SPAN = dict(threshold=0.5)
+_TOKEN = dict(threshold=0.4, mode="token")
 
 
-def q_kg_entities_tokenmode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-mode scorer (start/end/inside + min-rule span assembly,
-    reference M7/D5) — rows-only check (learned-weight analog)."""
-    # 0.4: the hash-seeded scorer needs a slightly laxer threshold than
-    # a trained model on this tiny-vocabulary corpus to emit any spans.
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.4,
-        lang_col=None, mode="token",
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
+class KernelGate(NamedTuple):
+    """A rows-only extraction gate. ``kind``: ``entities``, ``triples``
+    (over RELATIONS) or ``generative`` (its ``generated_labels`` come
+    back "|"-joined as ``gen_labels``); ``config``: PipelineConfig
+    fields; ``extras``: the operator's other keyword arguments, where
+    ``driver_label_matrix=True`` passes the driver-side label matrix
+    (see ``gate_extras``); ``columns``: the output columns."""
+
+    kind: str
+    config: dict
+    extras: dict
+    columns: tuple
 
 
-def q_kg_entities_convspan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alternative span-representation family (conv_mean window grid,
-    span_rep.py:157-267) through the full distributed path — rows-only
-    check (learned-weight analog)."""
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.55, lang_col=None,
-        span_mode="conv_mean",
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
+# Every row scores ENT_LABELS through the one prepare -> score -> decode
+# kernel. The token-mode entity rows run at 0.4, under the 0.5 default:
+# the hash-seeded scorer needs a laxer threshold than a trained model on
+# this tiny-vocabulary corpus to emit any spans.
+KERNEL_GATES: dict[str, KernelGate] = {
+    # span scoring at the defaults (gliner/model.py:1493-1520)
+    "kg_entities_zeroshot": KernelGate("entities", _SPAN, {}, _ENT_COLS),
+    # start/end/inside token scores + min-rule span assembly (M7/D5)
+    "kg_entities_tokenmode": KernelGate("entities", _TOKEN, {}, _ENT_COLS),
+    # trie-constrained generated labels per confident span (M15/D10, model.py:2066-2345)
+    "kg_entities_genlabels": KernelGate(
+        "generative", _SPAN, dict(gazetteer=GAZ_FULL, **_GEN), _GEN_COLS
+    ),
+    # token generative decoder (model.py:2346, decoder.py:1427-1528); 0.35, under
+    # its fixed 0.5 keep cut (base.py:1702), for a gen-diverse row set
+    "kg_entities_genlabels_token": KernelGate(
+        "generative", dict(threshold=0.35, mode="token"), _GEN, _GEN_COLS
+    ),
+    # token mode against the driver-side label matrix (model.py:2033, predict_with_embeds)
+    "kg_entities_biencoder_token": KernelGate(
+        "entities", _TOKEN, dict(driver_label_matrix=True), _ENT_COLS
+    ),
+    # conv_mean span representations (span_rep.py:157-267)
+    "kg_entities_convspan": KernelGate(
+        "entities", dict(threshold=0.55, span_mode="conv_mean"), {}, _ENT_COLS
+    ),
+    # RNN-smoothed word embeddings (M4, layers.py:9-64)
+    "kg_entities_rnn": KernelGate(
+        "entities", dict(threshold=0.55, num_rnn_layers=1), {}, _ENT_COLS
+    ),
+    # GCN adjacency (relations_layers.py:186-269); gazetteer + patterns as in
+    # kg_triples_zeroshot, because without them it emitted ~0 relations
+    "kg_triples_adjmode_gcn": KernelGate(
+        "triples", dict(threshold=0.5, relations_mode="gcn"), _GAZ_PAT, _TRIPLE_COLS
+    ),
+    # ONNX span graph over the fake session (T1-T4 feed, model.py:1875-1931)
+    "kg_entities_onnx": KernelGate(
+        "entities", _SPAN, dict(encoder_factory=ort.fake_span_encoder_factory), _ENT_COLS
+    ),
+    # token ONNX graph: (3,B,W,C) logits, no span grid (model.py:1941-1989)
+    "kg_entities_tokenmode_onnx": KernelGate(
+        "entities", _TOKEN, dict(encoder_factory=ort.fake_token_encoder_factory), _ENT_COLS
+    ),
+    # bi-encoder ONNX span graph: labels_embeddings input, no prompt (model.py:1746)
+    "kg_entities_biencoder_onnx": KernelGate("entities", _SPAN, dict(
+        encoder_factory=ort.fake_biencoder_span_encoder_factory, driver_label_matrix=True,
+    ), _ENT_COLS),
+    # bi-encoder token ONNX graph (model.py:2033-2070)
+    "kg_entities_biencoder_token_onnx": KernelGate("entities", _TOKEN, dict(
+        encoder_factory=ort.fake_biencoder_token_encoder_factory, driver_label_matrix=True,
+    ), _ENT_COLS),
+    # ONNX relex graph: logits/rel_idx/rel_logits/rel_mask (base.py:2134-2291)
+    "kg_triples_onnx": KernelGate(
+        "triples", _SPAN, dict(encoder_factory=ort.fake_relex_encoder_factory), _TRIPLE_COLS
+    ),
+    # token-mode joint relex (model.py:2902, decoder.py:1305-1310); adjacency 0.35 and
+    # relation 0.2: three multiplied sparse stages sit under a trained model's scores
+    "kg_triples_tokenmode": KernelGate(
+        "triples", dict(_TOKEN, adjacency_threshold=0.35, relation_threshold=0.2), {},
+        ("doc_id", "subj_start", "subj_end", "subj_text", "pred",
+         "obj_start", "obj_end", "obj_text", "score"),
+    ),
+    # token-relex ONNX graph: token inputs, relex outputs (model.py:2916-2952)
+    "kg_triples_tokenmode_onnx": KernelGate(
+        "triples", dict(threshold=0.5, mode="token"),
+        dict(encoder_factory=ort.fake_token_relex_encoder_factory), _TRIPLE_COLS,
+    ),
+    # joint relex with gazetteer recall and predicate patterns (SURVEY §3.2)
+    "kg_triples_zeroshot": KernelGate("triples", _SPAN, _GAZ_PAT, _TRIPLE_COLS),
+}
 
 
-def q_kg_entities_rnn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 RNN-smoothed word embeddings (layers.py:9-64 analog) — the
-    contextual scoring path — rows-only check."""
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.55, lang_col=None,
-        num_rnn_layers=1,
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
+def gate_extras(gate: KernelGate) -> dict:
+    """``gate.extras`` as keyword arguments. ``driver_label_matrix``
+    becomes the bi-encoder label precompute (encode_labels, M8), done
+    once on the driver: it ships in the task closure, so the label
+    encoder never runs on the executors."""
+    extras = dict(gate.extras)
+    if extras.pop("driver_label_matrix", False):
+        extras["label_embeddings"] = get_encoder(64, 42).embed_labels(ENT_LABELS)
+    return extras
 
 
-def q_kg_entities_genlabels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generative label decoding (M15/D10 — the encoder-decoder family,
-    reference model.py:2066-2345): trie-constrained generation attaches
-    ``num_gen_sequences`` generated type strings per confident span.
-    Rows-only at the driver (learned-LM analog); exact distributed-vs-
-    kernel row-set equality in tests/test_kernel_oracle.py."""
-    ents = extract_entities_generative(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        threshold=0.5,
-        lang_col=None,
-        gazetteer=GAZ_FULL,
-        gen_constraints=GEN_CONSTRAINTS,
-        num_gen_sequences=2,
-    )
-    return (
-        _as_doc_id(ents)
-        .select(
-            "doc_id", "start", "end", "text", "label", "score",
-            F.concat_ws("|", "generated_labels").alias("gen_labels"),
-        )
-    )
+def _kernel_query(gate: KernelGate) -> Callable[[SparkSession, str], DataFrame]:
+    operator = {
+        "entities": extract_entities,
+        "triples": extract_triples,
+        "generative": extract_entities_generative,
+    }[gate.kind]
+    relations = dict(relations=RELATIONS) if gate.kind == "triples" else {}
 
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        out = _as_doc_id(operator(
+            _pages(spark, sf_dir), labels=ENT_LABELS, lang_col=None,
+            **relations, **gate.config, **gate_extras(gate),
+        ))
+        if gate.kind == "generative":
+            out = out.withColumn("gen_labels", F.concat_ws("|", "generated_labels"))
+        return out.select(*gate.columns)
 
-def q_kg_entities_biencoder_token(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BiEncoderTokenGLiNER (reference model.py:2033): TOKEN-mode
-    scoring fed by DRIVER-PRECOMPUTED label embeddings (the
-    predict_with_embeds contract, tests/test_modeling.py:1134) — the
-    label encoder never runs on the executors; the (C, D) matrix ships
-    in the task closure and every worker scores (W, C, 3) BIO probs
-    against it. Rows-only at the driver (learned-weight analog); exact
-    distributed-vs-kernel row-set equality in
-    tests/test_kernel_oracle.py."""
-    from gliner_spark.model.encoder import get_encoder
-
-    embs = get_encoder(64, 42).embed_labels(ENT_LABELS)
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.4,
-        lang_col=None, mode="token", label_embeddings=embs,
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
-
-
-def q_kg_entities_genlabels_token(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniEncoderTokenDecoderGLiNER (reference model.py:2346,
-    decoder_class TokenGenerativeDecoder, decoder.py:1427): BIO token
-    flags propose candidate spans, candidates re-score against the
-    label embeddings, the trie-constrained LM head generates
-    ``num_gen_sequences`` type strings per decoder-kept candidate
-    (hard-coded 0.5 keep cut, base.py:1702), and the final decode runs
-    over the candidate span probs with gen labels keyed by candidate
-    position (decoder.py:1528). threshold 0.35: the hash-seeded analog
-    needs a laxer cut than a trained model for a non-vacuous, gen-
-    diverse row set (same reasoning as kg_entities_tokenmode).
-    Rows-only at the driver; kernel oracle in
-    tests/test_kernel_oracle.py."""
-    ents = extract_entities_generative(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        threshold=0.35,
-        lang_col=None,
-        gen_constraints=GEN_CONSTRAINTS,
-        num_gen_sequences=2,
-        mode="token",
-    )
-    return (
-        _as_doc_id(ents)
-        .select(
-            "doc_id", "start", "end", "text", "label", "score",
-            F.concat_ws("|", "generated_labels").alias("gen_labels"),
-        )
-    )
-
-
-def q_kg_triples_adjmode_gcn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint relex with the GCN adjacency predictor
-    (relations_layers.py:186-269 analog). Configured like
-    kg_triples_zeroshot (gazetteer recall + predicate patterns) so the
-    gate emits rows — the zero-shot-only config produced ~0 relations
-    from the deterministic encoder and asserted nothing (round-2
-    verdict). GCN adjacency still scores every non-pattern pair, and
-    the kernel oracle (tests/test_kernel_oracle.py) checks the full
-    output row-for-row."""
-    t = extract_triples(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        relations=RELATIONS,
-        threshold=0.5,
-        gazetteer=GAZ_FULL,
-        patterns=PATTERNS,
-        lang_col=None,
-        relations_mode="gcn",
-    )
-    return _as_doc_id(t).select("doc_id", "subj_text", "pred", "obj_text", "score")
-
-
-def q_kg_entities_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION backend path: full ONNX contract (T1 prompt → T3
-    subword tokenize → T4 word masks → span grid feed → session.run →
-    decode) over the contract-faithful fake session — rows-only check
-    (session weights are hash-seeded, not SQL-expressible)."""
-    from gliner_spark.model.ort_testing import fake_span_encoder_factory
-
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.5, lang_col=None,
-        encoder_factory=fake_span_encoder_factory,
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
-
-
-def q_kg_entities_tokenmode_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-mode ONNX graph contract ((3,B,W,C) position-first logits,
-    no span grid in the declared inputs) — rows-only check."""
-    from gliner_spark.model.ort_testing import fake_token_encoder_factory
-
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.4, lang_col=None,
-        mode="token", encoder_factory=fake_token_encoder_factory,
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
-
-
-def q_kg_entities_biencoder_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bi-encoder ONNX graph contract (labels_embeddings input,
-    gliner/model.py:1746 + onnx/model.py:160-220): the label matrix is
-    precomputed ONCE on the driver (encode_labels, M8) and rides every
-    executor feed — the text carries no <<ENT>> prompt and the label
-    encoder never runs on the executors. Rows-only check."""
-    from gliner_spark.model.encoder import get_encoder
-    from gliner_spark.model.ort_testing import fake_biencoder_span_encoder_factory
-
-    embs = get_encoder(64, 42).embed_labels(ENT_LABELS)
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.5, lang_col=None,
-        encoder_factory=fake_biencoder_span_encoder_factory,
-        label_embeddings=embs,
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
-
-
-def q_kg_entities_biencoder_token_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bi-encoder TOKEN ONNX graph contract (BiEncoderTokenGLiNER +
-    BiEncoderTokenORTModel, reference model.py:2033-2070): token-family
-    inputs (no span grid, no text prompt) + the driver-precomputed
-    labels_embeddings tensor; (3,B,W,C) position-first logits decoded
-    with the BIO min rule. Rows-only check (kernel oracle in
-    tests/test_kernel_oracle.py)."""
-    from gliner_spark.model.encoder import get_encoder
-    from gliner_spark.model.ort_testing import fake_biencoder_token_encoder_factory
-
-    embs = get_encoder(64, 42).embed_labels(ENT_LABELS)
-    ents = extract_entities(
-        _pages(spark, sf_dir), labels=ENT_LABELS, threshold=0.4, lang_col=None,
-        mode="token", encoder_factory=fake_biencoder_token_encoder_factory,
-        label_embeddings=embs,
-    )
-    return _as_doc_id(ents).select("doc_id", "start", "end", "text", "label", "score")
-
-
-def q_kg_triples_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint relex through the ONNX relex graph contract (4-output
-    session: logits/rel_idx/rel_logits/rel_mask) — rows-only check."""
-    from gliner_spark.model.ort_testing import fake_relex_encoder_factory
-
-    t = extract_triples(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        relations=RELATIONS,
-        threshold=0.5,
-        lang_col=None,
-        encoder_factory=fake_relex_encoder_factory,
-    )
-    return _as_doc_id(t).select("doc_id", "subj_text", "pred", "obj_text", "score")
-
-
-def q_kg_triples_tokenmode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-mode JOINT relex (UniEncoderTokenRelexGLiNER,
-    gliner/model.py:2902): BIO token scoring proposes candidate spans
-    (extract_spans_from_tokens), the relex tail runs over the candidate
-    list, and TokenRelexDecoder validates rel_idx against the
-    post-greedy span list (decoder.py:1305-1310) — rows-only check
-    (kernel oracle in tests/test_kernel_oracle.py).
-
-    Thresholds: the hash-seeded analog's relation scores sit lower than
-    a trained model's (three multiplied sparse stages), so the gate
-    relaxes adjacency/relation thresholds to emit a non-vacuous row
-    set — a weight choice, not a semantics change."""
-    t = extract_triples(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        relations=RELATIONS,
-        threshold=0.4,
-        adjacency_threshold=0.35,
-        relation_threshold=0.2,
-        lang_col=None,
-        mode="token",
-    )
-    return _as_doc_id(t).select(
-        "doc_id", "subj_start", "subj_end", "subj_text", "pred",
-        "obj_start", "obj_end", "obj_text", "score",
-    )
-
-
-def q_kg_triples_tokenmode_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-relex ONNX graph contract: TOKEN inputs (no span grid),
-    RELEX outputs ((3,B,W,C) logits + rel_idx/rel_logits/rel_mask,
-    model.py:2916-2952) with candidate proposal + adjacency + pair
-    scoring in-graph — rows-only check."""
-    from gliner_spark.model.ort_testing import fake_token_relex_encoder_factory
-
-    t = extract_triples(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        relations=RELATIONS,
-        threshold=0.5,
-        lang_col=None,
-        mode="token",
-        encoder_factory=fake_token_relex_encoder_factory,
-    )
-    return _as_doc_id(t).select("doc_id", "subj_text", "pred", "obj_text", "score")
+    return query
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,22 +459,6 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _shared(spark, sf_dir, "gaz_triples", build)
-
-
-def q_kg_triples_zeroshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint relex head with encoder scoring — rows-only check."""
-    t = extract_triples(
-        _pages(spark, sf_dir),
-        labels=ENT_LABELS,
-        relations=RELATIONS,
-        threshold=0.5,
-        gazetteer=GAZ_FULL,
-        patterns=PATTERNS,
-        lang_col=None,
-    )
-    return _as_doc_id(t).select(
-        "doc_id", "subj_text", "pred", "obj_text", "score"
-    )
 
 
 def q_kg_linking_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1465,22 +1327,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_nfc": q_text_nfc,
         # ---- rows-only gates (learned-weight analogs; exact
         # distributed-vs-kernel equality in tests/test_kernel_oracle.py) ----
-        "kg_entities_zeroshot": q_kg_entities_zeroshot,
-        "kg_entities_tokenmode": q_kg_entities_tokenmode,
-        "kg_entities_genlabels": q_kg_entities_genlabels,
-        "kg_entities_genlabels_token": q_kg_entities_genlabels_token,
-        "kg_entities_biencoder_token": q_kg_entities_biencoder_token,
-        "kg_entities_convspan": q_kg_entities_convspan,
-        "kg_entities_rnn": q_kg_entities_rnn,
-        "kg_triples_adjmode_gcn": q_kg_triples_adjmode_gcn,
-        "kg_entities_onnx": q_kg_entities_onnx,
-        "kg_entities_tokenmode_onnx": q_kg_entities_tokenmode_onnx,
-        "kg_entities_biencoder_onnx": q_kg_entities_biencoder_onnx,
-        "kg_entities_biencoder_token_onnx": q_kg_entities_biencoder_token_onnx,
-        "kg_triples_onnx": q_kg_triples_onnx,
-        "kg_triples_tokenmode": q_kg_triples_tokenmode,
-        "kg_triples_tokenmode_onnx": q_kg_triples_tokenmode_onnx,
-        "kg_triples_zeroshot": q_kg_triples_zeroshot,
+        **{name: _kernel_query(gate) for name, gate in KERNEL_GATES.items()},
         "kg_triples_kge_ranked": q_kg_triples_kge_ranked,
     }
 

@@ -101,6 +101,12 @@ class PipelineConfig:
     batch_size: int = 8
 
 
+def _check_batch_len(name: str, per_doc: Optional[Sequence], texts: Sequence[str]) -> None:
+    """A per-document argument must have one entry per text."""
+    if per_doc is not None and len(per_doc) != len(texts):
+        raise ValueError(f"{name} has {len(per_doc)} entries for {len(texts)} texts")
+
+
 class GLiNERPipeline:
     """Zero-shot span NER + joint relation extraction over raw strings."""
 
@@ -294,6 +300,7 @@ class GLiNERPipeline:
     def _prepare_batch(self, texts: Sequence[str], langs: Optional[Sequence[str]]):
         """Stage 1: ``(doc index, tokens, starts, ends)`` for every
         document with text and at least one token."""
+        _check_batch_len("langs", langs, texts)
         lang_list = list(langs) if langs is not None else ["en"] * len(texts)
         prepared = []
         for i, (text, lang) in enumerate(zip(texts, lang_list)):
@@ -644,6 +651,7 @@ class GLiNERPipeline:
         per-document ``predict_entities`` calls.
         """
         thr = self._thresholds(threshold)[0]
+        _check_batch_len("input_spans_list", input_spans_list, texts)
         spans_list = list(input_spans_list) if input_spans_list is not None else None
         results: List[List[Dict[str, Any]]] = [[] for _ in texts]
         prepared = self._prepare_batch(texts, langs)

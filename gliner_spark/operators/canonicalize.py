@@ -86,7 +86,10 @@ def connected_components(
         return spark.createDataFrame(
             rows, f"node {node_type}, component {node_type}"
         )
-    return _cc_star(edge_rows, src, dst, max_iter)
+    try:
+        return _cc_star(edge_rows, src, dst, max_iter)
+    finally:
+        edge_rows.unpersist()
 
 
 def _cc_star(edge_rows: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
@@ -149,16 +152,17 @@ def _cc_star(edge_rows: DataFrame, src: str, dst: str, max_iter: int) -> DataFra
         )
         new_edges = small.localCheckpoint(eager=True)
         # converged when the canonical edge set is unchanged
-        if (
+        converged = (
             new_edges.count() == edges.count()
             and new_edges.exceptAll(edges).limit(1).count() == 0
-        ):
-            edges = new_edges
-            converged = True
-            break
+        )
+        _release(edges)
         edges = new_edges
+        if converged:
+            break
 
     if not converged:
+        _release(edges)
         # The fixpoint guarantees the edge set is a star forest rooted
         # at each component's min; a pre-convergence edge set is NOT
         # (e.g. path 1-5-2 mid-contraction: node 2 has no smaller
@@ -175,7 +179,9 @@ def _cc_star(edge_rows: DataFrame, src: str, dst: str, max_iter: int) -> DataFra
     assign = edges.groupBy(F.col("u").alias("node")).agg(
         F.min("v").alias("component")
     )
-    return (
+    # materialized, so that the result is the one persistent RDD the
+    # call leaves behind: every round's checkpoint is released
+    result = (
         all_nodes.join(assign, "node", "left")
         .select(
             "node",
@@ -183,7 +189,17 @@ def _cc_star(edge_rows: DataFrame, src: str, dst: str, max_iter: int) -> DataFra
             .cast(node_type)
             .alias("component"),
         )
+        .localCheckpoint(eager=True)
     )
+    _release(edges)
+    return result
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` DataFrame, which
+    ``DataFrame.unpersist`` does not reach: the checkpoint is the
+    persisted RDD under its ``LogicalRDD`` plan."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def canonical_entities(match_edges: DataFrame, mentions: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Callable, List, Optional
+from typing import Callable, List
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -161,7 +161,6 @@ class RunManifest:
         out_path: str,
         key_col: str = "url",
         n_chunks: int = 8,
-        count_col: Optional[str] = None,
         extra_partition_cols: tuple = (),
     ) -> List[ChunkResult]:
         """Process ``source`` chunk-by-chunk with resume.

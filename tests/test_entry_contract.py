@@ -58,25 +58,7 @@ class TestContract:
         rows_only = set(entry.queries()) - set(entry.oracle_sql())
         # only the learned-weight analogs (deterministic encoder + the
         # hash-seeded fake ONNX session) are exempt from SQL oracles
-        assert rows_only == {
-            "kg_entities_zeroshot",
-            "kg_triples_zeroshot",
-            "kg_entities_tokenmode",
-            "kg_entities_genlabels",
-            "kg_entities_genlabels_token",
-            "kg_entities_biencoder_token",
-            "kg_entities_convspan",
-            "kg_entities_rnn",
-            "kg_triples_adjmode_gcn",
-            "kg_entities_onnx",
-            "kg_entities_tokenmode_onnx",
-            "kg_entities_biencoder_onnx",
-            "kg_entities_biencoder_token_onnx",
-            "kg_triples_onnx",
-            "kg_triples_tokenmode",
-            "kg_triples_tokenmode_onnx",
-            "kg_triples_kge_ranked",
-        }
+        assert rows_only == {*entry.KERNEL_GATES, "kg_triples_kge_ranked"}
         # contractual ordering (round-4 verdict #3): every exact-oracle
         # gate precedes every rows-only gate, so a driver sampling a
         # prefix of queries() verifies all hash-exact oracles

@@ -10,8 +10,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from gliner_spark.model.encoder import DeterministicEncoder
 from gliner_spark.model.pipeline import GLiNERPipeline, PipelineConfig
-from gliner_spark.operators.extract import extract_entities, extract_triples
+from gliner_spark.operators.extract import (
+    _ensure_parallelism,
+    extract_entities,
+    extract_triples,
+)
 from gliner_spark.plans.skew import salted_repartition, length_bucketed
 from gliner_spark.sources.pages import pages_df, synth_pages
 
@@ -103,3 +108,104 @@ class TestTripleExtraction:
             "url", "subj_start", "subj_end", "subj_text", "subj_label",
             "pred", "obj_start", "obj_end", "obj_text", "obj_label", "score",
         }
+
+
+class TestFactoryCacheKey:
+    """pipeline cache: two lambdas with identical qualnames but
+    different closures must NOT share a cached pipeline (ADVICE #2)."""
+
+    def test_distinct_closures_distinct_keys(self):
+        from gliner_spark.operators.extract import _factory_key
+
+        def make(path):
+            return lambda: path  # same qualname for every `path`
+
+        k1 = _factory_key(make("model_a.onnx"))
+        k2 = _factory_key(make("model_b.onnx"))
+        assert k1 != k2
+        # and identical closures agree (the cache still hits)
+        assert _factory_key(make("model_a.onnx")) == k1
+
+    def test_explicit_key_wins(self):
+        from gliner_spark.operators.extract import _factory_key
+
+        f = lambda: None  # noqa: E731
+        assert _factory_key(f, encoder_key="prod-v3") == ("explicit", "prod-v3")
+
+    def test_distinct_pipelines_from_colliding_lambdas(self):
+        from gliner_spark.operators.extract import _get_pipeline
+
+        def make(seed):
+            return lambda: DeterministicEncoder(dim=8, seed=seed)
+
+        p1 = _get_pipeline(["x"], [], {"threshold": 0.5}, encoder_factory=make(1))
+        p2 = _get_pipeline(["x"], [], {"threshold": 0.5}, encoder_factory=make(2))
+        assert p1.encoder.seed == 1 and p2.encoder.seed == 2
+
+
+class TestEnsureParallelismFallback:
+    """non-file sources: probe actual partitions instead of forcing a
+    repartition that could SHRINK a many-partition source (ADVICE #5)."""
+
+    def test_many_partition_memory_source_untouched(self, spark):
+        from gliner_spark.operators.extract import _ensure_parallelism
+
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(1000).repartition(par + 8)
+        out = _ensure_parallelism(df, None)
+        assert out.rdd.getNumPartitions() == par + 8  # no forced shrink
+
+    def test_small_memory_source_fanned_out(self, spark):
+        from gliner_spark.operators.extract import _ensure_parallelism
+
+        df = spark.range(100).coalesce(1)
+        out = _ensure_parallelism(df, None)
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+class TestPlanProbeGuardRails:
+    def test_shuffle_repartition_on_spine_stands_down(self, spark):
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(100).repartition(par).selectExpr("id", "id * 2 AS y")
+        out = _ensure_parallelism(df, None)
+        assert out is df  # no second exchange
+
+    def test_dimension_side_repartition_does_not_count(self, spark):
+        """A repartition on the broadcast/dimension side of a join says
+        nothing about THIS input's parallelism — the probe must stop at
+        the Join and still fan out the 1-partition fact side."""
+        par = spark.sparkContext.defaultParallelism
+        fact = spark.range(100).coalesce(1).withColumn("k", F.col("id") % 5)
+        dim = (
+            spark.range(5)
+            .repartition(4)
+            .select(F.col("id").alias("k"), F.lit("x").alias("meta"))
+        )
+        joined = fact.join(F.broadcast(dim), "k")
+        out = _ensure_parallelism(joined, None)
+        assert out is not joined
+        assert out.rdd.getNumPartitions() == par
+
+    def test_narrow_shuffle_repartition_still_fans_out(self, spark):
+        """df.repartition(1) IS a shuffle repartition but an explicit
+        shrink — the width check must not mistake it for a fan-out."""
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(100).repartition(1)
+        out = _ensure_parallelism(df, None)
+        assert out.rdd.getNumPartitions() == par
+
+    def test_keyed_repartition_stands_down(self, spark):
+        """A caller's salted/keyed repartition (RepartitionByExpression)
+        at full width is the canonical 'already handled' case."""
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(100).repartition(par, "id")
+        out = _ensure_parallelism(df, None)
+        assert out is df
+
+    def test_coalesce_still_fans_out(self, spark):
+        """Regression pin for the first round-5 probe bug: coalesce
+        prints Repartition(shuffle=false) and must NOT stand down."""
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(100).coalesce(1)
+        out = _ensure_parallelism(df, None)
+        assert out.rdd.getNumPartitions() == par

@@ -60,30 +60,53 @@ def _spark_rows(spark, name, sf_dir):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _kernel_entities(docs, pipe):
-    rows = []
-    for doc_id, text in docs:
-        for e in pipe.predict_entities(text, "en"):
-            rows.append(
-                (doc_id, e["start"], e["end"], e["text"], e["label"], float(e["score"]))
-            )
-    return sorted(rows)
+def kernel_route(gate):
+    """``(kind, GLiNERPipeline kwargs, call kwargs)`` of a
+    ``KERNEL_GATES`` row: the single-process kernel its operator builds
+    on every worker."""
+    extras = entry.gate_extras(gate)
+    call = {k: extras.pop(k) for k in ("gen_constraints", "num_gen_sequences") if k in extras}
+    factory = extras.pop("encoder_factory", None)
+    pipe_kw = dict(
+        labels=entry.ENT_LABELS,
+        relations=entry.RELATIONS if gate.kind == "triples" else [],
+        config=PipelineConfig(**gate.config),
+        encoder=factory() if factory else None,
+        **extras,
+    )
+    return gate.kind, pipe_kw, call
 
 
-def _kernel_triples(docs, pipe):
+def _triple_record(r):
+    h, t = r["head"], r["tail"]
+    return {
+        "subj_start": h["start"], "subj_end": h["end"], "subj_text": h["text"],
+        "pred": r["relation"],
+        "obj_start": t["start"], "obj_end": t["end"], "obj_text": t["text"],
+        "score": r["score"],
+    }
+
+
+def _kernel_rows(gate, docs, pipe, call):
+    """The gate's rows computed one document at a time on the driver."""
     rows = []
     for doc_id, text in docs:
-        _ents, rels = pipe.predict_triples(text, "en")
-        for r in rels:
-            rows.append(
-                (
-                    doc_id,
-                    r["head"]["text"],
-                    r["relation"],
-                    r["tail"]["text"],
-                    float(r["score"]),
-                )
+        if gate.kind == "triples":
+            recs = [_triple_record(r) for r in pipe.predict_triples(text, "en")[1]]
+        elif gate.kind == "generative":
+            recs = [
+                dict(e, gen_labels="|".join(e.get("generated_labels") or []))
+                for e in pipe.predict_entities_generative(text, "en", **call)
+            ]
+        else:
+            recs = pipe.predict_entities(text, "en")
+        rows += [
+            tuple(
+                doc_id if c == "doc_id" else float(rec[c]) if c == "score" else rec[c]
+                for c in gate.columns
             )
+            for rec in recs
+        ]
     return sorted(rows)
 
 
@@ -94,279 +117,80 @@ def _assert_equal(got, want, min_rows=50):
     assert got == want
 
 
-# ---------------------------------------------------------------------------
-# entity gates (deterministic-encoder paths)
-# ---------------------------------------------------------------------------
+def _check_gate(name, spark, docs, sf_dir):
+    gate = entry.KERNEL_GATES[name]
+    kind, pipe_kw, call = kernel_route(gate)
+    want = _kernel_rows(gate, docs, GLiNERPipeline(**pipe_kw), call)
+    got = _spark_rows(spark, name, sf_dir)
+    _assert_equal(got, want)
+    if kind == "generative":
+        # non-vacuity: the generated strings vary across spans and are
+        # all members of the closed constraint set. In token mode some
+        # kept spans carry none: the decoder's 0.5 keep cut is stricter
+        # than the gate's 0.35 decode threshold.
+        gens = {r[-1] for r in got}
+        if gate.config.get("mode") == "token":
+            gens.discard("")
+        assert len(gens) > 1
+        allowed = set(entry.GEN_CONSTRAINTS)
+        assert all(part in allowed for g in gens for part in g.split("|"))
+    if gate.config.get("relations_mode") == "gcn":
+        # and the gate must differ from the bilinear default somewhere,
+        # or the mode knob isn't actually reaching the adjacency head
+        cfg = {k: v for k, v in gate.config.items() if k != "relations_mode"}
+        bilinear = GLiNERPipeline(**dict(pipe_kw, config=PipelineConfig(**cfg)))
+        assert want != _kernel_rows(gate, docs, bilinear, call)
+
+
+def test_every_kernel_gate_is_checked():
+    """Each ``KERNEL_GATES`` row has exactly one test below."""
+    checked = [
+        test.gate
+        for cls in (TestEntityGates, TestSessionGates, TestTripleGates)
+        for attr, test in vars(cls).items()
+        if attr.startswith("test_")
+    ]
+    assert sorted(checked) == sorted(entry.KERNEL_GATES)
+
+
+def _gate_test(name):
+    def test(self, spark, docs, sf_dir):
+        _check_gate(name, spark, docs, sf_dir)
+
+    test.gate = name
+    return test
+
+
+# One test per KERNEL_GATES row and scale factor: the distributed gate
+# (mapInPandas over executors, batched scoring, Arrow transport) against
+# the kernel built from the same row. The session gates' per-document
+# kernel calls also certify that the length-sorted session sub-batches
+# emit identical rows.
 
 
 class TestEntityGates:
-    def test_zeroshot(self, spark, docs, sf_dir):
-        pipe = GLiNERPipeline(entry.ENT_LABELS, [], PipelineConfig(threshold=0.5))
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_zeroshot", sf_dir), _kernel_entities(docs, pipe)
-        )
-
-    def test_tokenmode(self, spark, docs, sf_dir):
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [], PipelineConfig(threshold=0.4, mode="token")
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_tokenmode", sf_dir), _kernel_entities(docs, pipe)
-        )
-
-    def test_convspan(self, spark, docs, sf_dir):
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [],
-            PipelineConfig(threshold=0.55, span_mode="conv_mean"),
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_convspan", sf_dir), _kernel_entities(docs, pipe)
-        )
-
-    def test_genlabels(self, spark, docs, sf_dir):
-        """M15/D10 generative label decoding: the distributed gate's
-        rows (incl. the trie-constrained generated strings) must equal
-        the single-process kernel's bit-for-bit."""
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [], PipelineConfig(threshold=0.5),
-            gazetteer=entry.GAZ_FULL,
-        )
-        rows = []
-        for doc_id, text in docs:
-            for e in pipe.predict_entities_generative(
-                text, "en", gen_constraints=entry.GEN_CONSTRAINTS,
-                num_gen_sequences=2,
-            ):
-                rows.append(
-                    (
-                        doc_id, e["start"], e["end"], e["text"], e["label"],
-                        float(e["score"]),
-                        "|".join(e.get("generated_labels") or []),
-                    )
-                )
-        got = _spark_rows(spark, "kg_entities_genlabels", sf_dir)
-        _assert_equal(got, sorted(rows))
-        # non-vacuity: the generated strings vary across spans and are
-        # all members of the closed constraint set
-        gens = {r[-1] for r in got}
-        assert len(gens) > 1
-        allowed = set(entry.GEN_CONSTRAINTS)
-        assert all(part in allowed for g in gens for part in g.split("|"))
-
-    def test_biencoder_token(self, spark, docs, sf_dir):
-        """BiEncoderTokenGLiNER analog (reference model.py:2033): TOKEN
-        scoring against a DRIVER-precomputed label matrix — the
-        predict_with_embeds contract on the token family."""
-        from gliner_spark.model.encoder import get_encoder
-
-        embs = get_encoder(64, 42).embed_labels(entry.ENT_LABELS)
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [],
-            PipelineConfig(threshold=0.4, mode="token"),
-            label_embeddings=embs,
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_biencoder_token", sf_dir),
-            _kernel_entities(docs, pipe),
-        )
-
-    def test_genlabels_token(self, spark, docs, sf_dir):
-        """UniEncoderTokenDecoderGLiNER analog (model.py:2346,
-        TokenGenerativeDecoder): distributed gate rows — including the
-        candidate-position-keyed generated strings — must equal the
-        single-process kernel's bit-for-bit."""
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [], PipelineConfig(threshold=0.35, mode="token")
-        )
-        rows = []
-        for doc_id, text in docs:
-            for e in pipe.predict_entities_generative(
-                text, "en", gen_constraints=entry.GEN_CONSTRAINTS,
-                num_gen_sequences=2,
-            ):
-                rows.append(
-                    (
-                        doc_id, e["start"], e["end"], e["text"], e["label"],
-                        float(e["score"]),
-                        "|".join(e.get("generated_labels") or []),
-                    )
-                )
-        got = _spark_rows(spark, "kg_entities_genlabels_token", sf_dir)
-        _assert_equal(got, sorted(rows))
-        # non-vacuity: generation varies across spans, stays inside the
-        # closed constraint set, and some decoder-kept span actually
-        # carries labels (the 0.5 keep cut is stricter than the 0.35
-        # decode threshold, so both populated and empty are possible)
-        gens = {r[-1] for r in got if r[-1]}
-        assert len(gens) > 1
-        allowed = set(entry.GEN_CONSTRAINTS)
-        assert all(part in allowed for g in gens for part in g.split("|"))
-
-    def test_rnn(self, spark, docs, sf_dir):
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [],
-            PipelineConfig(threshold=0.55, num_rnn_layers=1),
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_rnn", sf_dir), _kernel_entities(docs, pipe)
-        )
-
-
-# ---------------------------------------------------------------------------
-# fake-session (ONNX contract) gates — per-document kernel calls also
-# certify the batched session path (length-sorted sub-batches) emits
-# identical rows
-# ---------------------------------------------------------------------------
+    test_zeroshot = _gate_test("kg_entities_zeroshot")
+    test_tokenmode = _gate_test("kg_entities_tokenmode")
+    test_convspan = _gate_test("kg_entities_convspan")
+    test_genlabels = _gate_test("kg_entities_genlabels")
+    test_biencoder_token = _gate_test("kg_entities_biencoder_token")
+    test_genlabels_token = _gate_test("kg_entities_genlabels_token")
+    test_rnn = _gate_test("kg_entities_rnn")
 
 
 class TestSessionGates:
-    def test_entities_onnx(self, spark, docs, sf_dir):
-        from gliner_spark.model.ort_testing import fake_span_encoder_factory
-
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [], PipelineConfig(threshold=0.5),
-            encoder=fake_span_encoder_factory(),
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_onnx", sf_dir), _kernel_entities(docs, pipe)
-        )
-
-    def test_entities_tokenmode_onnx(self, spark, docs, sf_dir):
-        from gliner_spark.model.ort_testing import fake_token_encoder_factory
-
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [], PipelineConfig(threshold=0.4, mode="token"),
-            encoder=fake_token_encoder_factory(),
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_tokenmode_onnx", sf_dir),
-            _kernel_entities(docs, pipe),
-        )
-
-    def test_entities_biencoder_onnx(self, spark, docs, sf_dir):
-        """Bi-encoder ONNX contract: driver-precomputed label matrix
-        rides every feed (labels_embeddings input, no prompt)."""
-        from gliner_spark.model.encoder import get_encoder
-        from gliner_spark.model.ort_testing import (
-            fake_biencoder_span_encoder_factory,
-        )
-
-        embs = get_encoder(64, 42).embed_labels(entry.ENT_LABELS)
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [], PipelineConfig(threshold=0.5),
-            encoder=fake_biencoder_span_encoder_factory(),
-            label_embeddings=embs,
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_biencoder_onnx", sf_dir),
-            _kernel_entities(docs, pipe),
-        )
-
-    def test_entities_biencoder_token_onnx(self, spark, docs, sf_dir):
-        """Bi-encoder TOKEN ONNX contract (BiEncoderTokenGLiNER,
-        model.py:2033-2070): precomputed label matrix + token inputs,
-        no prompt, (3,B,W,C) logits — distributed vs kernel."""
-        from gliner_spark.model.encoder import get_encoder
-        from gliner_spark.model.ort_testing import (
-            fake_biencoder_token_encoder_factory,
-        )
-
-        embs = get_encoder(64, 42).embed_labels(entry.ENT_LABELS)
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, [],
-            PipelineConfig(threshold=0.4, mode="token"),
-            encoder=fake_biencoder_token_encoder_factory(),
-            label_embeddings=embs,
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_entities_biencoder_token_onnx", sf_dir),
-            _kernel_entities(docs, pipe),
-        )
-
-    def test_triples_onnx(self, spark, docs, sf_dir):
-        from gliner_spark.model.ort_testing import fake_relex_encoder_factory
-
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, entry.RELATIONS, PipelineConfig(threshold=0.5),
-            encoder=fake_relex_encoder_factory(),
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_triples_onnx", sf_dir), _kernel_triples(docs, pipe)
-        )
-
-    def test_triples_tokenmode_onnx(self, spark, docs, sf_dir):
-        """Token-relex ONNX contract (token inputs, relex outputs,
-        in-graph candidate proposal): batched session sub-batches on
-        executors vs per-document kernel calls on the driver."""
-        from gliner_spark.model.ort_testing import fake_token_relex_encoder_factory
-
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, entry.RELATIONS,
-            PipelineConfig(threshold=0.5, mode="token"),
-            encoder=fake_token_relex_encoder_factory(),
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_triples_tokenmode_onnx", sf_dir),
-            _kernel_triples(docs, pipe),
-        )
-
-
-# ---------------------------------------------------------------------------
-# relex gates
-# ---------------------------------------------------------------------------
+    test_entities_onnx = _gate_test("kg_entities_onnx")
+    test_entities_tokenmode_onnx = _gate_test("kg_entities_tokenmode_onnx")
+    test_entities_biencoder_onnx = _gate_test("kg_entities_biencoder_onnx")
+    test_entities_biencoder_token_onnx = _gate_test("kg_entities_biencoder_token_onnx")
+    test_triples_onnx = _gate_test("kg_triples_onnx")
+    test_triples_tokenmode_onnx = _gate_test("kg_triples_tokenmode_onnx")
 
 
 class TestTripleGates:
-    def test_triples_zeroshot(self, spark, docs, sf_dir):
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, entry.RELATIONS, PipelineConfig(threshold=0.5),
-            gazetteer=entry.GAZ_FULL, patterns=entry.PATTERNS,
-        )
-        _assert_equal(
-            _spark_rows(spark, "kg_triples_zeroshot", sf_dir), _kernel_triples(docs, pipe)
-        )
-
-    def test_triples_tokenmode(self, spark, docs, sf_dir):
-        """Token-mode JOINT relex (UniEncoderTokenRelexGLiNER analog):
-        distributed mapInPandas vs the Spark-free kernel, full row-set
-        equality incl. char offsets and bit-identical scores."""
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, entry.RELATIONS,
-            PipelineConfig(
-                threshold=0.4, adjacency_threshold=0.35,
-                relation_threshold=0.2, mode="token",
-            ),
-        )
-        rows = []
-        for doc_id, text in docs:
-            _ents, rels = pipe.predict_triples(text, "en")
-            for r in rels:
-                rows.append(
-                    (
-                        doc_id,
-                        r["head"]["start"], r["head"]["end"], r["head"]["text"],
-                        r["relation"],
-                        r["tail"]["start"], r["tail"]["end"], r["tail"]["text"],
-                        float(r["score"]),
-                    )
-                )
-        _assert_equal(_spark_rows(spark, "kg_triples_tokenmode", sf_dir), sorted(rows))
-
-    def test_triples_adjmode_gcn(self, spark, docs, sf_dir):
-        pipe = GLiNERPipeline(
-            entry.ENT_LABELS, entry.RELATIONS,
-            PipelineConfig(threshold=0.5, relations_mode="gcn"),
-            gazetteer=entry.GAZ_FULL, patterns=entry.PATTERNS,
-        )
-        want = _kernel_triples(docs, pipe)
-        _assert_equal(_spark_rows(spark, "kg_triples_adjmode_gcn", sf_dir), want)
-        # and the gate must differ from the bilinear default somewhere,
-        # or the mode knob isn't actually reaching the adjacency head
-        bilinear = GLiNERPipeline(
-            entry.ENT_LABELS, entry.RELATIONS, PipelineConfig(threshold=0.5),
-            gazetteer=entry.GAZ_FULL, patterns=entry.PATTERNS,
-        )
-        assert want != _kernel_triples(docs, bilinear)
+    test_triples_zeroshot = _gate_test("kg_triples_zeroshot")
+    test_triples_tokenmode = _gate_test("kg_triples_tokenmode")
+    test_triples_adjmode_gcn = _gate_test("kg_triples_adjmode_gcn")
 
 
 # ---------------------------------------------------------------------------

@@ -176,3 +176,23 @@ class TestExtendedInteractionLaws:
             )
             assert np.array_equal(full, parts), name
             assert np.array_equal(full, score_triples_np(h, r, t, name)), name
+
+
+def test_kge_surface_cache_key_count_bounded():
+    """The per-(dim, seed) sub-cache dict must not grow without bound on
+    a long-lived executor (same class of leak as the round-3
+    encoder._score_cache advice)."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from gliner_spark.operators import kge_scores as K
+
+    K._SURFACE_CACHE.clear()
+    for seed in range(K._SURFACE_CACHE_KEYS_MAX + 8):
+        enc = SimpleNamespace(
+            dim=4, seed=seed, token_embedding=lambda w: np.ones(4)
+        )
+        K._embed_batch(enc, ["alpha"])
+    assert len(K._SURFACE_CACHE) <= K._SURFACE_CACHE_KEYS_MAX
+    K._SURFACE_CACHE.clear()

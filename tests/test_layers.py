@@ -1,5 +1,6 @@
 """M4 RNN smoothing + M9 cross-fusion analogs (reference layers.py:9-64,
-298-404) — the last two missing §2 operators from round 1."""
+298-404) — the last two missing §2 operators from round 1 — and the
+DeterministicEncoder's bounded span/score caches."""
 
 import numpy as np
 import pytest
@@ -105,3 +106,65 @@ class TestPipelineWiring:
         on = [GLiNERPipeline(["person", "place"], config=cfg_on).predict_entities(t) for t in texts]
         off = [GLiNERPipeline(["person", "place"], config=cfg_off).predict_entities(t) for t in texts]
         assert on != off
+
+
+class TestCacheEvictionOrder:
+    """encoder caches: a clear AFTER computing `missing` evicted this
+    call's cache hits and KeyError'd the fill loop (ADVICE #1)."""
+
+    def test_span_cache_overflow_mid_call(self):
+        enc = DeterministicEncoder(dim=8)
+        sidx = np.array([[0, 0], [1, 1], [0, 1]])
+        first = enc.span_representations_tokens(["aa", "bb"], sidx)
+        # simulate a full cache containing this call's hit keys: the old
+        # code computed `missing` (empty), then cleared, then KeyError'd
+        class _Full(dict):
+            def __len__(self):
+                return 3_000_000
+
+        enc._span_cache = _Full(enc._span_cache)
+        again = enc.span_representations_tokens(["aa", "bb"], sidx)
+        np.testing.assert_array_equal(first, again)
+
+    def test_score_cache_overflow_mid_call(self):
+        enc = DeterministicEncoder(dim=8)
+        labels = enc.embed_labels(["x", "y"])
+        sidx = np.array([[0, 0], [0, 1], [1, 1]])
+        first = enc.score_spans_tokens(["aa", "bb"], sidx, labels, "k")
+
+        class _Full(dict):
+            def __len__(self):
+                return 3_000_000
+
+        # wrap the per-label-set sub-dict (the level the bound guards)
+        enc._score_cache["k"] = _Full(enc._score_cache["k"])
+        again = enc.score_spans_tokens(["aa", "bb"], sidx, labels, "k")
+        np.testing.assert_array_equal(first, again)
+
+
+class TestScoreCacheLabelKeyBound:
+    """_score_cache is a dict of per-label-key sub-caches; r3 bounded
+    each sub-cache at 2M entries but never the number of label keys —
+    every distinct label set (incl. predict_with_embeds digests) added
+    another unbounded-count sub-cache on a long-lived executor
+    singleton (ADVICE #4)."""
+
+    def test_label_key_count_is_capped(self):
+        enc = DeterministicEncoder(dim=8)
+        labels = enc.embed_labels(["x", "y"])
+        sidx = np.array([[0, 0], [0, 1]])
+        for i in range(100):
+            enc.score_spans_tokens(["aa", "bb"], sidx, labels, f"key-{i}")
+        assert len(enc._score_cache) <= 32
+
+    def test_eviction_is_fifo_and_values_stable(self):
+        enc = DeterministicEncoder(dim=8)
+        labels = enc.embed_labels(["x", "y"])
+        sidx = np.array([[0, 0], [0, 1], [1, 1]])
+        first = enc.score_spans_tokens(["aa", "bb"], sidx, labels, "k0")
+        for i in range(1, 40):  # push k0 out of the FIFO
+            enc.score_spans_tokens(["aa", "bb"], sidx, labels, f"k{i}")
+        assert "k0" not in enc._score_cache
+        # recompute after eviction: bit-identical (cache is transparent)
+        again = enc.score_spans_tokens(["aa", "bb"], sidx, labels, "k0")
+        np.testing.assert_array_equal(first, again)

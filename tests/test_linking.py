@@ -232,6 +232,18 @@ class TestStarConnectedComponents:
             got = self._assign(spark, pairs, algo, max_driver_edges=0 if algo != "driver" else 10**9)
             assert got == exp, algo
 
+    def test_star_keeps_only_its_result_cached(self, spark):
+        """A star call leaves at most one persistent RDD behind, the one
+        its result reads: the edge set and every round's checkpoint are
+        released."""
+        jsc = spark.sparkContext._jsc
+        pairs = [(i, i + 1) for i in range(10)]
+        for _ in range(2):
+            before = jsc.getPersistentRDDs().size()
+            got = self._assign(spark, pairs, "star")
+            assert jsc.getPersistentRDDs().size() - before <= 1
+            assert got == self._reference(pairs)
+
     def test_auto_routes_star_above_threshold(self, spark, monkeypatch):
         # force the big-graph route and ensure it runs star
         from gliner_spark.operators import canonicalize as cz
@@ -252,3 +264,28 @@ class TestStarConnectedComponents:
         for algo in ("graphx", "propagation"):
             with pytest.raises(ValueError, match="algorithm"):
                 self._assign(spark, [(0, 1)], algo)
+
+
+class TestCcNonConvergence:
+    """star CC: a pre-convergence exit must raise, not silently emit
+    non-root components (ADVICE #3)."""
+
+    def test_raises_when_max_iter_too_low(self, spark):
+        from gliner_spark.operators.canonicalize import connected_components
+
+        # a long chain needs >1 star round; max_iter=1 must refuse
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(200)], "src long, dst long"
+        )
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(edges, algorithm="star", max_iter=1).collect()
+
+    def test_converged_chain_still_correct(self, spark):
+        from gliner_spark.operators.canonicalize import connected_components
+
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(200)], "src long, dst long"
+        )
+        out = connected_components(edges, algorithm="star")
+        comps = {r.node: r.component for r in out.collect()}
+        assert set(comps.values()) == {0} and len(comps) == 201

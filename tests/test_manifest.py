@@ -172,6 +172,66 @@ class TestIncrementalRefresh:
         ) == before
 
 
+class TestManifestCounts:
+    """A committed chunk's ``n_docs`` is its source rows and ``n_rows``
+    its written rows, in the returned ChunkResult and in the manifest
+    row alike; a chunk without documents records 0/0."""
+
+    @staticmethod
+    def _counts(spark, man, run_id, results, source, out, n_chunks):
+        docs = {
+            r.c: r.n
+            for r in source.groupBy(
+                F.pmod(F.hash("url"), F.lit(n_chunks)).alias("c")
+            ).agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        written = {
+            r.chunk: r["count"]
+            for r in spark.read.parquet(out).groupBy("chunk").count().collect()
+        }
+        recorded = {
+            r.chunk: (r.n_docs, r.n_rows)
+            for r in spark.read.parquet(man).where(F.col("run_id") == run_id).collect()
+        }
+        got = {r.chunk: (r.n_docs, r.n_rows) for r in results if not r.skipped}
+        assert got == {k: (docs.get(k, 0), written.get(k, 0)) for k in got}
+        assert recorded == got
+        return got
+
+    def test_run_counts(self, spark, tmp_path):
+        pages = pages_df(spark, 5).cache()
+        out, man = str(tmp_path / "t"), str(tmp_path / "m")
+        res = RunManifest(spark, man, "r1").run(pages, transform, out, n_chunks=8)
+        got = self._counts(spark, man, "r1", res, pages, out, 8)
+        assert len(got) == 8
+        assert (0, 0) in got.values()  # 5 documents leave a chunk empty
+        assert any(n_rows > 0 for _n_docs, n_rows in got.values())
+
+    def test_run_incremental_counts(self, spark, tmp_path):
+        old = pages_df(spark, 40).cache()
+        out, man = str(tmp_path / "t"), str(tmp_path / "m")
+        RunManifest(spark, man, "base").run(old, transform, out, n_chunks=4)
+        chunked = old.withColumn("c", F.pmod(F.hash("url"), F.lit(4)))
+        changed = chunked.where(F.col("c") != 2).orderBy("url").first().url
+        new = (
+            old.join(chunked.where(F.col("c") == 2).select("url"), "url", "left_anti")
+            .withColumn(
+                "text",
+                F.when(
+                    F.col("url") == changed,
+                    F.concat(F.col("text"), F.lit(" john smith arrives")),
+                ).otherwise(F.col("text")),
+            )
+            .cache()
+        )
+        res = RunManifest(spark, man, "inc").run_incremental(
+            old, new, transform, out, n_chunks=4
+        )
+        got = self._counts(spark, man, "inc", res, new, out, 4)
+        assert got[2] == (0, 0)  # every url of chunk 2 is gone
+        assert any(n_docs > 0 for n_docs, _n_rows in got.values())
+
+
 class TestLayoutGuard:
     """Chunk membership is pmod(hash(key), n_chunks): a rerun (or
     incremental refresh) under a different layout would rewrite a

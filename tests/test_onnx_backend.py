@@ -436,3 +436,22 @@ class TestBiEncoderSession:
         assert pipe.predict_entities_batch(texts) == [
             pipe.predict_entities(t) for t in texts
         ]
+
+
+class TestSessionMaxWidthGuard:
+    """session backends: a silently ignored PipelineConfig.max_width
+    changed span-width coverage (ADVICE #4) — now a loud mismatch."""
+
+    def test_mismatch_raises(self):
+        from gliner_spark.model.ort_testing import fake_span_encoder_factory
+
+        enc = fake_span_encoder_factory()  # max_width=12
+        with pytest.raises(ValueError, match="max_width"):
+            GLiNERPipeline(["x"], [], PipelineConfig(max_width=8), encoder=enc)
+
+    def test_matching_width_ok(self):
+        from gliner_spark.model.ort_testing import fake_span_encoder_factory
+
+        enc = fake_span_encoder_factory()
+        pipe = GLiNERPipeline(["x"], [], PipelineConfig(max_width=12), encoder=enc)
+        assert pipe.is_session_backend

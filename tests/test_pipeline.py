@@ -165,77 +165,37 @@ class TestTokenModeArgThreading:
 
 def _golden_routes():
     """name -> (kind, pipeline kwargs, call kwargs) for every extraction
-    route: the 16 rows-only extraction gates of ``__spark_entry__``
-    configured as the gates configure them, plus ``kg_triples``'
+    route: the 16 ``KERNEL_GATES`` rows of ``__spark_entry__`` as their
+    kernel oracle builds them, plus variants of them for ``kg_triples``'
     gazetteer scoring, ``return_class_probs``, ``input_spans`` and the
     generative ``decoder_mode="prompt"``."""
     import __spark_entry__ as entry
-    from gliner_spark.model.encoder import get_encoder
-    from gliner_spark.model import ort_testing as ort
+    from tests.test_kernel_oracle import kernel_route
 
-    labels, rels = entry.ENT_LABELS, entry.RELATIONS
-    embs = get_encoder(64, 42).embed_labels(labels)
+    routes = {name: kernel_route(gate) for name, gate in entry.KERNEL_GATES.items()}
+
+    def variant(name, call, **pipe_kw):
+        kind, kw, gate_call = routes[name]
+        return kind, dict(kw, **pipe_kw), dict(gate_call, **call)
+
     gaz = dict(gazetteer=entry.GAZ_FULL)
-    gaz_pat = dict(gazetteer=entry.GAZ_FULL, patterns=entry.PATTERNS)
-    gen = dict(gen_constraints=entry.GEN_CONSTRAINTS, num_gen_sequences=2)
-
-    def ent(cfg, call=None, **kw):
-        return "entities", dict(labels=labels, config=PipelineConfig(**cfg), **kw), call or {}
-
-    def tri(cfg, **kw):
-        return "triples", dict(labels=labels, relations=rels, config=PipelineConfig(**cfg), **kw), {}
-
-    def genl(cfg, call, **kw):
-        return "generative", dict(labels=labels, config=PipelineConfig(**cfg), **kw), call
-
-    tok = dict(mode="token")
-    return {
-        "kg_entities_zeroshot": ent(dict(threshold=0.5)),
-        "kg_entities_tokenmode": ent(dict(threshold=0.4, **tok)),
-        "kg_entities_convspan": ent(dict(threshold=0.55, span_mode="conv_mean")),
-        "kg_entities_rnn": ent(dict(threshold=0.55, num_rnn_layers=1)),
-        "kg_entities_biencoder_token": ent(dict(threshold=0.4, **tok), label_embeddings=embs),
-        "kg_entities_onnx": ent(dict(threshold=0.5), encoder=ort.fake_span_encoder_factory()),
-        "kg_entities_tokenmode_onnx": ent(
-            dict(threshold=0.4, **tok), encoder=ort.fake_token_encoder_factory()
+    probs, spans = dict(return_class_probs=True), dict(input_spans=True)
+    prompt = dict(decoder_mode="prompt")
+    routes.update({
+        "kg_triples": variant(
+            "kg_triples_zeroshot", {},
+            config=PipelineConfig(threshold=0.5, scoring="gazetteer"),
         ),
-        "kg_entities_biencoder_onnx": ent(
-            dict(threshold=0.5), label_embeddings=embs,
-            encoder=ort.fake_biencoder_span_encoder_factory(),
-        ),
-        "kg_entities_biencoder_token_onnx": ent(
-            dict(threshold=0.4, **tok), label_embeddings=embs,
-            encoder=ort.fake_biencoder_token_encoder_factory(),
-        ),
-        "kg_entities_genlabels": genl(dict(threshold=0.5), gen, **gaz),
-        "kg_entities_genlabels_token": genl(dict(threshold=0.35, **tok), gen),
-        "kg_triples_zeroshot": tri(dict(threshold=0.5), **gaz_pat),
-        "kg_triples_adjmode_gcn": tri(dict(threshold=0.5, relations_mode="gcn"), **gaz_pat),
-        "kg_triples_onnx": tri(dict(threshold=0.5), encoder=ort.fake_relex_encoder_factory()),
-        "kg_triples_tokenmode": tri(
-            dict(threshold=0.4, adjacency_threshold=0.35, relation_threshold=0.2, **tok)
-        ),
-        "kg_triples_tokenmode_onnx": tri(
-            dict(threshold=0.5, **tok), encoder=ort.fake_token_relex_encoder_factory()
-        ),
-        "kg_triples": tri(dict(threshold=0.5, scoring="gazetteer"), **gaz_pat),
-        "class_probs_span": ent(dict(threshold=0.5), dict(return_class_probs=True), **gaz),
-        "class_probs_token": ent(dict(threshold=0.4, **tok), dict(return_class_probs=True)),
-        "class_probs_onnx": ent(
-            dict(threshold=0.5), dict(return_class_probs=True),
-            encoder=ort.fake_span_encoder_factory(),
-        ),
-        "input_spans_span": ent(dict(threshold=0.5), dict(input_spans=True), **gaz),
-        "input_spans_token": ent(dict(threshold=0.4, **tok), dict(input_spans=True)),
-        "input_spans_onnx": ent(
-            dict(threshold=0.5), dict(input_spans=True),
-            encoder=ort.fake_span_encoder_factory(),
-        ),
-        "genlabels_prompt": genl(dict(threshold=0.5), dict(decoder_mode="prompt", **gen), **gaz),
-        "genlabels_prompt_token": genl(
-            dict(threshold=0.35, **tok), dict(decoder_mode="prompt", **gen)
-        ),
-    }
+        "class_probs_span": variant("kg_entities_zeroshot", probs, **gaz),
+        "class_probs_token": variant("kg_entities_tokenmode", probs),
+        "class_probs_onnx": variant("kg_entities_onnx", probs),
+        "input_spans_span": variant("kg_entities_zeroshot", spans, **gaz),
+        "input_spans_token": variant("kg_entities_tokenmode", spans),
+        "input_spans_onnx": variant("kg_entities_onnx", spans),
+        "genlabels_prompt": variant("kg_entities_genlabels", prompt),
+        "genlabels_prompt_token": variant("kg_entities_genlabels_token", prompt),
+    })
+    return routes
 
 
 # (sha256 of json.dumps(per-doc outputs, sort_keys=True, default=repr),
@@ -357,3 +317,37 @@ def test_span_only_session_triples_are_entities_only():
     assert any(ents for ents, _ in want)
     assert [pipe.predict_triples(t) for t in texts] == want
     assert pipe.predict_triples_batch(texts) == want
+
+
+def test_batch_lengths_must_match_texts(pipe):
+    """A per-document argument with a length other than ``len(texts)``
+    is an error naming both lengths, not a silently empty document."""
+    texts = [TEXT, TEXT]
+    with pytest.raises(ValueError, match="langs has 1 entries for 2 texts"):
+        pipe.predict_entities_batch(texts, ["en"])
+    with pytest.raises(ValueError, match="langs has 3 entries for 2 texts"):
+        pipe.predict_triples_batch(texts, ["en"] * 3)
+    with pytest.raises(ValueError, match="input_spans_list has 1 entries for 2 texts"):
+        pipe.predict_entities_batch(texts, input_spans_list=[None])
+
+
+def test_token_route_honours_label_embeddings(golden_docs):
+    """Deterministic token mode scores against the caller's label
+    matrix: with its rows rotated, every entity's label maps through the
+    rotation and nothing else changes."""
+    import __spark_entry__ as entry
+    from gliner_spark.model.encoder import get_encoder
+
+    labels = entry.ENT_LABELS
+    cfg = PipelineConfig(threshold=0.4, mode="token")
+    perm = [*range(1, len(labels)), 0]
+    embs = get_encoder(64, 42).embed_labels(labels)[perm]
+    rotated = GLiNERPipeline(labels, config=cfg, label_embeddings=embs)
+    relabel = {labels[i]: labels[p] for i, p in enumerate(perm)}
+    want = GLiNERPipeline(labels, config=cfg).predict_entities_batch(golden_docs)
+    got = [
+        [dict(e, label=relabel[e["label"]]) for e in ents]
+        for ents in rotated.predict_entities_batch(golden_docs)
+    ]
+    assert sum(map(len, want)) > 100
+    assert got == want
