@@ -6,13 +6,22 @@ the same guarantee is built from parquet primitives:
 
 * the corpus is split into deterministic chunks by
   ``pmod(hash(url), n_chunks)`` — stable across reruns;
-* each chunk's outputs land under ``<out>/chunk=<k>/`` via dynamic
-  partition overwrite (rerunning a chunk REPLACES its directory, never
-  appends — idempotent);
+* each chunk erases ``<out>/chunk=<k>/`` and commits its outputs there
+  through ``sinks.graph.commit_partitions`` (dynamic partition
+  overwrite: rerunning a chunk REPLACES its directory, never appends —
+  idempotent);
 * a manifest row ``(run_id, chunk, n_docs, n_rows, wall_ms, status,
   finished_ts)`` is appended only AFTER the chunk's data commit;
 * resume = skip chunks whose manifest row exists. A kill between data
   write and manifest append reruns that chunk and overwrites it.
+
+Counts are observed, never read back: ``n_rows`` is observed on the
+chunk's write job, at the top of the written plan; ``n_docs`` comes
+from one ``groupBy(chunk).count()`` over the pending chunks before the
+first write. ``n_docs`` is not observed on the transform's input: a
+transform that prunes its input (``limit(0)``, ``where(False)``) lets
+the optimizer remove the observed node, and the observation then fails
+instead of reporting the chunk's documents.
 
 On Iceberg this maps 1:1 to MERGE INTO + a lineage table in one
 transaction; the chunk loop and manifest schema stay identical.
@@ -26,10 +35,16 @@ from typing import Callable, List
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sinks.graph import commit_partitions
+
 MANIFEST_SCHEMA = (
     "run_id string, chunk int, n_docs long, n_rows long, "
     "wall_ms long, status string, finished_ts timestamp"
 )
+
+
+def _chunk_id(key_col: str, n_chunks: int):
+    return F.pmod(F.hash(F.col(key_col)), F.lit(n_chunks))
 
 
 @dataclass
@@ -102,6 +117,11 @@ class RunManifest:
         """
         import json
 
+        want = {
+            "n_chunks": n_chunks,
+            "key_col": key_col,
+            "extra_partition_cols": list(extra_partition_cols),
+        }
         path = self._layout_path()
         fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if fs.exists(path):
@@ -115,11 +135,6 @@ class RunManifest:
             finally:
                 stream.close()
             saved = json.loads(raw.decode("utf-8"))
-            want = {
-                "n_chunks": n_chunks,
-                "key_col": key_col,
-                "extra_partition_cols": list(extra_partition_cols),
-            }
             saved.setdefault("extra_partition_cols", [])
             if saved != want:
                 raise ValueError(
@@ -130,16 +145,9 @@ class RunManifest:
                     "+ manifest to re-chunk)"
                 )
             return
-        payload = json.dumps(
-            {
-                "n_chunks": n_chunks,
-                "key_col": key_col,
-                "extra_partition_cols": list(extra_partition_cols),
-            }
-        ).encode("utf-8")
         stream = fs.create(path, True)
         try:
-            stream.write(bytearray(payload))
+            stream.write(bytearray(json.dumps(want).encode("utf-8")))
         finally:
             stream.close()
 
@@ -153,6 +161,41 @@ class RunManifest:
             .write.mode("append")
             .parquet(self.manifest_path)
         )
+
+    def _run_chunks(
+        self, source, transform, out_path, chunk_id, part_cols, chunks, done
+    ) -> List[ChunkResult]:
+        """Run ``transform`` on each chunk of ``chunks`` not in ``done``
+        (``chunk_id`` assigns source rows to chunks); one ChunkResult per
+        chunk of ``chunks``."""
+        chunked = source.withColumn("__chunk", chunk_id)
+        pending = [k for k in chunks if k not in done]
+        n_docs = dict(
+            chunked.where(F.col("__chunk").isin(pending))
+            .groupBy("__chunk")
+            .count()
+            .collect()  # bounded by n_chunks — driver-safe
+        ) if pending else {}
+        results: List[ChunkResult] = []
+        for k in chunks:
+            if k in done:
+                results.append(ChunkResult(k, 0, 0, 0, skipped=True))
+                continue
+            t0 = time.time()
+            chunk_df = chunked.where(F.col("__chunk") == k).drop("__chunk")
+            out = transform(chunk_df).withColumn("chunk", F.lit(k))
+            # dynamic overwrite can't ERASE a partition whose new content
+            # is zero rows, so a refreshed chunk whose urls all vanished
+            # would keep its stale triples — delete the chunk directory
+            # first. A chunk without a manifest row was never committed;
+            # a crash after the delete just reruns the chunk.
+            self._delete_chunk_dir(out_path, k)
+            n_rows, _parts = commit_partitions(out, out_path, part_cols)
+            wall_ms = int((time.time() - t0) * 1000)
+            docs = n_docs.get(k, 0)
+            self._append_manifest(k, docs, n_rows, wall_ms)
+            results.append(ChunkResult(k, docs, n_rows, wall_ms, skipped=False))
+        return results
 
     def run(
         self,
@@ -169,40 +212,16 @@ class RunManifest:
         Outputs are written parquet-partitioned by ``chunk`` (plus any
         ``extra_partition_cols`` — e.g. ``("pred",)`` materializes the
         north rule's predicate-partitioned graph table, with predicate
-        scans pruning to their directories); the overwrite mode is
-        per-partition (dynamic), so retries replace rather than
-        duplicate — a chunk replay owns every (chunk, pred) partition
-        it rewrites.
+        scans pruning to their directories); a chunk replay owns every
+        (chunk, pred) partition it rewrites, so retries replace rather
+        than duplicate.
         """
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         self._check_layout(n_chunks, key_col, extra_partition_cols)
-        done = self.completed_chunks()
-        results: List[ChunkResult] = []
-        chunked = source.withColumn(
-            "__chunk", F.pmod(F.hash(F.col(key_col)), F.lit(n_chunks))
+        return self._run_chunks(
+            source, transform, out_path, _chunk_id(key_col, n_chunks),
+            ["chunk", *extra_partition_cols], range(n_chunks),
+            self.completed_chunks(),
         )
-        part_cols = ["chunk", *extra_partition_cols]
-        for k in range(n_chunks):
-            if k in done:
-                results.append(ChunkResult(k, 0, 0, 0, skipped=True))
-                continue
-            t0 = time.time()
-            chunk_df = chunked.where(F.col("__chunk") == k).drop("__chunk")
-            out = transform(chunk_df).withColumn("chunk", F.lit(k))
-            out.write.mode("overwrite").partitionBy(*part_cols).parquet(out_path)
-            # Read back with an explicit schema: an all-empty chunk writes
-            # no part files and schema inference would fail on it.
-            n_rows = (
-                self.spark.read.schema(out.schema)
-                .parquet(out_path)
-                .where(F.col("chunk") == k)
-                .count()
-            )
-            n_docs = chunk_df.count()
-            wall_ms = int((time.time() - t0) * 1000)
-            self._append_manifest(k, n_docs, n_rows, wall_ms)
-            results.append(ChunkResult(k, n_docs, n_rows, wall_ms, skipped=False))
-        return results
 
     def run_incremental(
         self,
@@ -247,50 +266,16 @@ class RunManifest:
         delta = crawl_delta(
             prev_source, source, id_col=key_col, text_col=text_col
         )
+        chunk_id = _chunk_id(key_col, n_chunks)
         affected = sorted(
             r.c
             for r in delta.where(F.col("status") != "unchanged")
-            .select(
-                F.pmod(F.hash(F.col(key_col)), F.lit(n_chunks)).alias("c")
-            )
+            .select(chunk_id.alias("c"))
             .distinct()
             .collect()  # bounded by n_chunks — driver-safe at any scale
         )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        return self._run_chunks(
+            source, transform, out_path, chunk_id,
+            ["chunk", *extra_partition_cols], affected,
+            self.completed_chunks(run_id_only=True),
         )
-        done_here = self.completed_chunks(run_id_only=True)
-        results: List[ChunkResult] = []
-        chunked = source.withColumn(
-            "__chunk", F.pmod(F.hash(F.col(key_col)), F.lit(n_chunks))
-        )
-        part_cols = ["chunk", *extra_partition_cols]
-        for k in affected:
-            if k in done_here:
-                results.append(ChunkResult(k, 0, 0, 0, skipped=True))
-                continue
-            t0 = time.time()
-            chunk_df = chunked.where(F.col("__chunk") == k).drop("__chunk")
-            out = transform(chunk_df).withColumn("chunk", F.lit(k))
-            # dynamic overwrite can't ERASE a partition whose refreshed
-            # content is zero rows (nothing written = nothing replaced),
-            # so a chunk whose urls all disappeared would keep its stale
-            # triples — delete the chunk directory first. A crash after
-            # the delete just re-runs the chunk (no manifest row yet).
-            self._delete_chunk_dir(out_path, k)
-            out.write.mode("overwrite").partitionBy(*part_cols).parquet(
-                out_path
-            )
-            n_rows = (
-                self.spark.read.schema(out.schema)
-                .parquet(out_path)
-                .where(F.col("chunk") == k)
-                .count()
-            )
-            n_docs = chunk_df.count()
-            wall_ms = int((time.time() - t0) * 1000)
-            self._append_manifest(k, n_docs, n_rows, wall_ms)
-            results.append(
-                ChunkResult(k, n_docs, n_rows, wall_ms, skipped=False)
-            )
-        return results

@@ -3,112 +3,93 @@
 The north rule's output contract: extracted (subj, pred, obj) triples
 land in partitioned Iceberg graph tables, with per-partition lineage
 rows and idempotent (checkpoint-resumable) writes. This module is that
-sink:
+sink, and it holds the one partitioned commit of the package:
 
-* ``write_graph_table`` — partition by ``pred`` (the natural query key
-  of a KG edge table: "give me all works_at edges" prunes to one
-  directory), dynamic partition overwrite (a rerun REPLACES its
-  partitions, never appends duplicates — the parquet analog of an
-  Iceberg ``REPLACE WHERE``; with an Iceberg catalog the same writer
-  commits through ``writeTo(table).overwritePartitions()``), lineage
-  appended AFTER the data commit (write-ahead ordering: a kill between
+* ``commit_partitions`` — dynamic partition overwrite (a rerun REPLACES
+  the partitions it writes, never appends duplicates — the parquet
+  analog of an Iceberg ``REPLACE WHERE``; with an Iceberg catalog the
+  same writer commits through ``writeTo(table).overwritePartitions()``)
+  returning the row count and the partition values written, both
+  observed on the write job itself. ``RunManifest`` commits its chunks
+  through it as well;
+* ``write_graph_table`` — drop exact duplicate triples, commit
+  partitioned by ``pred`` (the natural query key of a KG edge table:
+  "give me all works_at edges" prunes to one directory), then append
+  lineage AFTER the data commit (write-ahead ordering: a kill between
   the two reruns the write, which is idempotent);
-* ``read_graph_table`` — scan with predicate pushdown: a ``pred``
-  filter prunes to its partition directories (PartitionFilters in the
-  physical plan — asserted by tests/test_graph_sink.py);
-* per-partition lineage = one row (run_id, pred, n_rows, written_ts)
-  per predicate partition per run, the audit trail the rule demands.
+* ``append_lineage`` — one row (run_id, pred, n_rows, wall_ms,
+  written_ts) per predicate of the partitions a run owns;
+* ``read_graph_table`` — a ``pred`` filter prunes to its partition
+  directories (PartitionFilters — asserted by tests/test_graph_sink.py).
+
+Observation placement: ``commit_partitions`` observes the DataFrame it
+writes, at the top of the written plan, never a transform's input. An
+observed node under an operator the optimizer prunes (a ``limit(0)`` or
+``where(False)`` downstream) is removed with it and ``Observation.get``
+fails; at the top nothing is downstream, so an empty output reports 0
+rows and no partitions. Per-predicate counts cannot ride the same
+observation (``observe`` takes no grouped aggregate): they come from a
+read-back of the owned partitions only, so lineage records what is on
+disk.
 
 Composition with plans/manifest.RunManifest: the manifest chunks the
 CORPUS (resume unit = input chunk); this sink partitions the OUTPUT
-(query unit = predicate). A resumable full-corpus run uses both —
-``RunManifest.run(transform=extract_triples, ...)`` writing through
-``write_graph_table`` per chunk with ``extra_partition_cols=("chunk",)``
-so replayed chunks replace exactly their own (chunk, pred) partitions.
-
-Scale notes (100 TB): the write's only movement is the shuffle implied
-by ``.repartition(partition_cols)`` when requested (off by default —
-the extractor's output partitioning is already fine and AQE coalesces
-small files); lineage counts ride ``groupBy(pred).count()`` which
-map-side combines to |preds| rows. Predicate skew (one dominant
-relation) affects file sizes, not correctness — pass
-``files_per_partition`` to spread a hot predicate over several files.
+(query unit = predicate). ``run_kg_job.py --partition-by-pred`` commits
+(chunk, pred) partitions through the manifest, then ``append_lineage``
+over the chunks that run committed.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 LINEAGE_SCHEMA = (
     "run_id string, pred string, n_rows long, wall_ms long, written_ts timestamp"
 )
 
-TRIPLE_COLS = (
-    "url",
-    "subj_start", "subj_end", "subj_text", "subj_label",
-    "pred",
-    "obj_start", "obj_end", "obj_text", "obj_label",
-    "score",
-)
+
+def commit_partitions(
+    out: DataFrame, path: str, part_cols: Sequence[str]
+) -> Tuple[int, List[tuple]]:
+    """Write ``out`` as parquet partitioned by ``part_cols`` with
+    dynamic partition overwrite; return ``(n_rows, partitions)`` —
+    the rows written and the distinct ``part_cols`` value tuples,
+    observed on the write job (no second evaluation of ``out``)."""
+    obs = Observation()
+    out.sparkSession.conf.set(
+        "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    )
+    out.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.collect_set(F.struct(*part_cols)).alias("partitions"),
+    ).write.mode("overwrite").partitionBy(*part_cols).parquet(path)
+    got = obs.get
+    return got["n_rows"], [tuple(p) for p in got["partitions"]]
 
 
-def write_graph_table(
-    triples: DataFrame,
-    path: str,
+def append_lineage(
+    committed: DataFrame,
+    owned: Sequence[tuple],
+    part_cols: Sequence[str],
     run_id: str,
-    partition_col: str = "pred",
-    extra_partition_cols: Sequence[str] = (),
-    lineage_path: Optional[str] = None,
-    distinct: bool = True,
-    files_per_partition: Optional[int] = None,
+    wall_ms: int,
+    lineage_path: str,
 ) -> DataFrame:
-    """Write a triples DataFrame as a partitioned graph table.
+    """Append one lineage row per ``pred`` of ``committed`` restricted
+    to the ``owned`` value tuples of ``part_cols``; return the rows
+    this call appended.
 
-    Returns the lineage DataFrame that was appended (one row per
-    ``partition_col`` value). Idempotent per partition: rerunning the
-    same input replaces the partitions it owns (dynamic overwrite) and
-    appends a fresh lineage row — consumers take the latest
-    ``written_ts`` per (run_id, pred) as authoritative.
-
-    ``distinct=True`` collapses exact duplicate triples (same doc, same
-    offsets, same labels) before the write — extraction replays and
-    multi-source unions stay idempotent at the ROW level too.
-    ``files_per_partition`` repartitions to bound file count per
-    partition value (hot-predicate file spread).
-    """
-    spark = triples.sparkSession
-    t0 = time.time()
-    part_cols = [partition_col, *extra_partition_cols]
-    out = triples
-    if distinct:
-        out = out.dropDuplicates()
-    if files_per_partition:
-        out = out.repartition(
-            files_per_partition * 4, *[F.col(c) for c in part_cols]
-        )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
-
-    # lineage AFTER the data commit (write-ahead ordering); counts come
-    # from a read-back of the committed files, so the audit row records
-    # what is actually on disk, not what the plan intended.
-    committed = spark.read.schema(out.schema).parquet(path)
-    # count ONLY the partitions this run owns (values present in the
-    # input), not sibling partitions left behind by earlier runs that
-    # wrote a different predicate set to the same path — attributing
-    # their counts to this run_id would corrupt the audit trail. The
-    # owned set is tiny (≤ partitions written this run) — collect it
-    # and pre-filter with per-column isin so the read-back SCAN prunes
-    # to the owned directories (a bare semi-join would read every
-    # partition first); the semi-join then refines to exact combos.
-    # Applied unconditionally: the default pred-only case needs the
-    # isolation just as much as the multi-column case.
-    own_rows = out.select(*part_cols).distinct().collect()
+    Sibling partitions left by earlier runs are not this run_id's. The
+    owned set is tiny, so a per-column ``isin`` prunes the read-back
+    scan to the owned directories (a bare semi-join would read every
+    partition first); a semi-join then refines to exact combinations."""
+    spark = committed.sparkSession
     for i, c in enumerate(part_cols):
-        vals = {r[i] for r in own_rows}
+        vals = {p[i] for p in owned}
         # NULL-aware: a NULL partition value lands in the hive default
         # partition and reads back as NULL; isin() never matches NULL,
         # so without the explicit isNull branch those committed rows
@@ -118,28 +99,56 @@ def write_graph_table(
             cond = cond | F.col(c).isNull()
         committed = committed.where(cond)
     if len(part_cols) > 1:
-        own = spark.createDataFrame(own_rows, out.select(*part_cols).schema)
+        own = spark.createDataFrame(owned, committed.select(*part_cols).schema)
         cond = None
         for c in part_cols:
             eq = committed[c].eqNullSafe(own[c])
             cond = eq if cond is None else (cond & eq)
         committed = committed.join(F.broadcast(own), cond, "left_semi")
-    wall_ms = int((time.time() - t0) * 1000)
-    lineage = (
-        committed.groupBy(partition_col)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col(partition_col).cast("string").alias("pred"),
-            F.col("n_rows").cast("long"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.current_timestamp().alias("written_ts"),
-        )
+    lineage = committed.groupBy("pred").agg(
+        F.count(F.lit(1)).alias("n_rows")
+    ).select(
+        F.lit(run_id).alias("run_id"),
+        F.col("pred").cast("string"),
+        F.col("n_rows").cast("long"),
+        F.lit(wall_ms).cast("long").alias("wall_ms"),
+        F.current_timestamp().alias("written_ts"),
     )
-    target = lineage_path or f"{path}_lineage"
-    lineage.write.mode("append").parquet(target)
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(target).where(
-        F.col("run_id") == run_id
+    # observed on the append itself (one row per predicate), so the
+    # returned rows are exactly the ones written, timestamps included
+    obs = Observation()
+    lineage.observe(
+        obs, F.collect_list(F.struct(*lineage.columns)).alias("rows")
+    ).write.mode("append").parquet(lineage_path)
+    return spark.createDataFrame(obs.get["rows"], LINEAGE_SCHEMA)
+
+
+def write_graph_table(
+    triples: DataFrame,
+    path: str,
+    run_id: str,
+    extra_partition_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Write a triples DataFrame as a graph table partitioned by
+    ``pred`` (plus ``extra_partition_cols``), lineage to
+    ``<path>_lineage``.
+
+    Exact duplicate triples (same doc, same offsets, same labels)
+    collapse before the write, so extraction replays and multi-source
+    unions stay idempotent at the ROW level too. Returns the lineage
+    rows this call appended (one per predicate it wrote). Idempotent
+    per partition: rerunning the same input replaces the partitions it
+    owns and appends fresh lineage rows — consumers take the latest
+    ``written_ts`` per (run_id, pred) as authoritative.
+    """
+    t0 = time.time()
+    part_cols = ["pred", *extra_partition_cols]
+    out = triples.dropDuplicates()
+    _n_rows, owned = commit_partitions(out, path, part_cols)
+    committed = out.sparkSession.read.schema(out.schema).parquet(path)
+    wall_ms = int((time.time() - t0) * 1000)
+    return append_lineage(
+        committed, owned, part_cols, run_id, wall_ms, f"{path}_lineage"
     )
 
 

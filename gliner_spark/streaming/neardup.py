@@ -43,8 +43,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.text import shingles
+from ..operators.canonicalize import _release
 
 STATE_SCHEMA = "band_idx int, band_sig string, owner string, epoch long"
+
+# state_path -> the keep_ids checkpoint of its latest epoch
+_LAST_KEEP_IDS: dict = {}
 
 
 def _band_rows(
@@ -112,7 +116,9 @@ def incremental_minhash_dedup(
     and persist their band signatures under ``epoch=<epoch>``.
 
     Use inside ``foreachBatch`` with ``epoch=batch_id``; callers chain
-    the extraction transform on the returned survivors.
+    the extraction transform on the returned survivors. The survivors
+    read a checkpoint that the next call for the same ``state_path``
+    releases, so consume them before starting the next epoch.
     """
     spark = batch_df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -166,6 +172,10 @@ def incremental_minhash_dedup(
     # one job. Stays distributed (no driver collect); size = surviving
     # doc ids of one micro-batch.
     keep_ids = keep_ids.localCheckpoint(eager=True)
+    prev = _LAST_KEEP_IDS.pop(state_path, None)
+    if prev is not None:
+        _release(prev)
+    _LAST_KEEP_IDS[state_path] = keep_ids
 
     # persist the survivors' bands for future epochs (idempotent: this
     # epoch's partition is replaced wholesale)

@@ -139,24 +139,16 @@ def main():
     rows = sum(r.n_rows for r in results)
     summary = {"chunks_run": done, "chunks_skipped": skipped, "new_rows": rows}
     if args.partition_by_pred and done:
-        # per-predicate lineage over the committed table (audit rows the
-        # north rule asks for alongside the chunk-level manifest)
-        from pyspark.sql import functions as F
+        # per-predicate lineage over the chunks THIS run committed (audit
+        # rows the north rule asks for alongside the chunk-level manifest)
+        from gliner_spark.sinks.graph import append_lineage
 
-        lineage = (
-            spark.read.parquet(args.out)
-            .groupBy("pred")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select(
-                F.lit(args.run_id).alias("run_id"),
-                F.col("pred").cast("string"),
-                F.col("n_rows").cast("long"),
-                F.lit(0).cast("long").alias("wall_ms"),
-                F.current_timestamp().alias("written_ts"),
-            )
-        )
-        lineage.write.mode("append").parquet(f"{args.out}_lineage")
-        summary["preds"] = lineage.count()
+        summary["preds"] = append_lineage(
+            spark.read.parquet(args.out),
+            [(r.chunk,) for r in results if not r.skipped],
+            ["chunk"], args.run_id, sum(r.wall_ms for r in results),
+            f"{args.out}_lineage",
+        ).count()
     if args.analytics:
         # derived graph tables over EVERYTHING committed so far (this
         # run's chunks + resumed history): integer math, so a re-run

@@ -112,15 +112,43 @@ class TestGraphSink:
         replay_rows = sum(r.n_rows for r in lineage.collect())
         assert replay_rows == c0.dropDuplicates().count()
 
-    def test_hot_predicate_file_spread(self, spark, triples, tmp_path):
-        import glob
-
+    def test_returns_only_lineage_rows_it_appended(
+        self, spark, triples, tmp_path
+    ):
+        """Two writes under one run_id: the second call returns its own
+        lineage rows, not the first call's as well."""
         path = str(tmp_path / "graph")
-        write_graph_table(triples, path, run_id="r1", files_per_partition=3)
-        preds = [p for (p,) in triples.select("pred").distinct().collect()]
-        for pred in preds:
-            files = glob.glob(f"{path}/pred={pred}/*.parquet")
-            assert len(files) >= 1
+        t0 = triples.withColumn(
+            "chunk", F.pmod(F.hash("url"), F.lit(2)).cast("int")
+        )
+        c0 = t0.where(F.col("chunk") == 0)
+        c1 = t0.where(F.col("chunk") == 1)
+        write_graph_table(c0, path, run_id="r1", extra_partition_cols=("chunk",))
+        second = write_graph_table(
+            c1, path, run_id="r1", extra_partition_cols=("chunk",)
+        ).collect()
+        preds = {p for (p,) in c1.select("pred").distinct().collect()}
+        assert sorted(r.pred for r in second) == sorted(preds)
+        assert sum(r.n_rows for r in second) == c1.dropDuplicates().count()
+        # both calls' rows are on disk
+        assert read_lineage(spark, path).count() == len(second) + len(
+            {p for (p,) in c0.select("pred").distinct().collect()}
+        )
+
+    def test_input_evaluated_once(self, spark, triples, tmp_path):
+        """The owned partitions come from the write job itself: the
+        input plan runs once per write."""
+        rows_seen = spark.sparkContext.accumulator(0)
+
+        def passthrough(batches):
+            for pdf in batches:
+                rows_seen.add(len(pdf))
+                yield pdf
+
+        src = triples.mapInPandas(passthrough, triples.schema)
+        n = triples.count()
+        write_graph_table(src, str(tmp_path / "graph"), run_id="r1")
+        assert rows_seen.value == n
 
 
 def test_null_pred_partition_counted(spark, triples, tmp_path):

@@ -232,6 +232,49 @@ class TestManifestCounts:
         assert any(n_docs > 0 for n_docs, _n_rows in got.values())
 
 
+    @staticmethod
+    def _pruned_counts(spark, man, run_id, results, source, n_chunks):
+        """Counts under an input-pruning transform: ``n_docs`` is still
+        the chunk's source rows and ``n_rows`` is 0."""
+        docs = {
+            r.c: r.n
+            for r in source.groupBy(
+                F.pmod(F.hash("url"), F.lit(n_chunks)).alias("c")
+            ).agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        got = {r.chunk: (r.n_docs, r.n_rows) for r in results if not r.skipped}
+        assert got and got == {k: (docs.get(k, 0), 0) for k in got}
+        recorded = {
+            r.chunk: (r.n_docs, r.n_rows)
+            for r in spark.read.parquet(man).where(F.col("run_id") == run_id).collect()
+        }
+        assert recorded == got
+        return got
+
+    def test_run_counts_input_pruning_transform(self, spark, tmp_path):
+        pages = pages_df(spark, 20).cache()
+        out, man = str(tmp_path / "t"), str(tmp_path / "m")
+        res = RunManifest(spark, man, "r1").run(
+            pages, lambda c: c.limit(0), out, n_chunks=3
+        )
+        got = self._pruned_counts(spark, man, "r1", res, pages, 3)
+        assert len(got) == 3 and sum(d for d, _ in got.values()) == 20
+
+    def test_run_incremental_counts_input_pruning_transform(self, spark, tmp_path):
+        old = pages_df(spark, 20).cache()
+        new = old.withColumn(
+            "text",
+            F.when(F.col("url") == old.orderBy("url").first().url, F.lit("edited"))
+            .otherwise(F.col("text")),
+        ).cache()
+        out, man = str(tmp_path / "t"), str(tmp_path / "m")
+        res = RunManifest(spark, man, "inc").run_incremental(
+            old, new, lambda c: c.limit(0), out, n_chunks=3
+        )
+        got = self._pruned_counts(spark, man, "inc", res, new, 3)
+        assert len(got) == 1 and list(got.values())[0][0] > 0
+
+
 class TestLayoutGuard:
     """Chunk membership is pmod(hash(key), n_chunks): a rerun (or
     incremental refresh) under a different layout would rewrite a

@@ -127,3 +127,18 @@ class TestIncrementalNearDup:
         # every dropped doc is the larger side of some batch candidate pair
         for d in dropped:
             assert any(b == d for (_a, b) in batch_pairs)
+
+
+def test_epochs_release_previous_checkpoint(spark, tmp_path):
+    """Each epoch releases the previous epoch's survivor checkpoint for
+    the same state path: the persistent-RDD count stays flat."""
+    state = str(tmp_path / "state")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    kept = []  # hold every epoch's frame so no checkpoint is collected
+    for epoch, text in enumerate([BASE, OTHER, NEAR, "fresh words " * 6]):
+        kept.append(incremental_minhash_dedup(
+            _batch(spark, [(f"e{epoch}", text)]), state, epoch=epoch
+        ))
+        kept[-1].collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
