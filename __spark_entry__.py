@@ -181,12 +181,13 @@ def _read_fanned(spark: SparkSession, path: str) -> DataFrame:
     defensive round-robin every map-heavy gate (repetition, simhash,
     HTML extraction, …) runs its per-row stage on a single core at any
     ``local[N]`` — the 64x scaling run measured a flat 0.26 efficiency
-    purely from this. ``_ensure_parallelism`` counts scan files: at
-    real corpus scale the scan yields ≥cores splits and this is a
-    no-op (no extra exchange); locally it costs one tiny shuffle and
-    buys full-core parallelism. Values are partitioning-invariant
-    (pinned by the local[2] ≡ local[8] determinism leg in
-    tests/test_submit_job.py and every oracle gate)."""
+    purely from this. A bare scan reports no output partitioning, so
+    ``_ensure_parallelism`` counts its files: at real corpus scale the
+    scan has ≥cores files and this is a no-op (no extra exchange);
+    locally it costs one tiny shuffle and buys full-core parallelism.
+    Values are partitioning-invariant (pinned by the local[2] ≡
+    local[8] determinism leg in tests/test_submit_job.py and every
+    oracle gate)."""
     from gliner_spark.operators.extract import _ensure_parallelism
 
     return _ensure_parallelism(spark.read.parquet(path), None)

@@ -24,31 +24,19 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     max_driver_edges: int = 5_000_000,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """edges(src, dst) → assignments(node, component).
 
     ``component`` is the minimum node id reachable from ``node``.
-    Deterministic; undirected interpretation of edges.
-
-    Physical routes with identical results (``algorithm``):
-
-    * ``auto`` — driver union-find for edge sets ≤ max_driver_edges,
-      else large-star/small-star. Match edges are the *rare* near-dup
-      pairs — a fraction of a percent of the corpus — so even a
-      10^12-doc run usually fits the driver route; the collect is of
-      edges, never of the corpus, and avoids paying per-round job
-      overhead for a tiny graph.
-    * ``star`` — alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond"): converges in
-      O(log n) rounds on ANY graph shape, including the adversarial
-      long chains where min-label propagation needs O(diameter)
-      rounds. One groupBy + one join per half-round, lineage truncated
-      per round. THE 100 TB default for big edge sets.
-    * ``driver`` — force the union-find route.
+    Deterministic; undirected interpretation of edges. Edge sets of at
+    most ``max_driver_edges`` edges take the driver union-find route,
+    larger ones the large-star/small-star route (``_cc_star``), with
+    identical results: ``-1`` forces star, a huge value forces the
+    driver. Match edges are the *rare* near-dup pairs, so even a
+    10^12-doc run usually fits the driver route; the collect is of
+    edges, never of the corpus, and avoids paying per-round job
+    overhead for a tiny graph.
     """
-    if algorithm not in ("auto", "driver", "star"):
-        raise ValueError(f"unknown CC algorithm {algorithm!r}")
     spark = edges.sparkSession
     # Materialize the edge set once, fully parallel, then decide the
     # route from its size. (A limit()-guarded collect would trigger
@@ -56,7 +44,7 @@ def connected_components(
     # expensive edge-generating child nearly serially.)
     edge_rows = edges.select(src, dst).persist()
     n_edges = edge_rows.count()
-    if algorithm == "driver" or (algorithm == "auto" and n_edges <= max_driver_edges):
+    if n_edges <= max_driver_edges:
         head = edge_rows.collect()
         edge_rows.unpersist()
         pairs = [(r[0], r[1]) for r in head]

@@ -29,7 +29,6 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-import re
 from typing import Iterator, List, Optional, Sequence
 
 import pandas as pd
@@ -52,85 +51,35 @@ TRIPLE_SCHEMA = (
 _PIPELINE_CACHE: dict = {}
 
 
-# logical-plan node for df.repartition(n): 'Repartition <n>, true'
-# (true = shuffle); coalesce prints ', false' and must NOT match
-_SHUFFLE_REPARTITION_RE = re.compile(r"Repartition (\d+), true")
-# df.repartition(n, cols): "'RepartitionByExpression ['col], <n>";
-# the width suffix is absent when the caller let the session's
-# shuffle-partition count apply
-_KEYED_REPARTITION_RE = re.compile(r"RepartitionByExpression .*\], (\d+)")
-
-
 def _ensure_parallelism(df: DataFrame, min_partitions: Optional[int]) -> DataFrame:
-    """Round-robin repartition when the scan under-partitions.
+    """Round-robin repartition when the input under-partitions.
 
     A small/compacted parquet file arrives as ONE input split, which
     serializes the whole extraction onto one core — the inverse of the
     skew problem. Default: bring partitions up to the cluster's
-    defaultParallelism (callers doing their own salted repartition pass
-    ``min_partitions=0`` to opt out). At 100 TB the scan naturally
-    yields ~maxPartitionBytes-sized splits and this is a no-op.
+    defaultParallelism when the input has fewer (callers doing their
+    own salted repartition pass ``min_partitions=0`` to opt out; a
+    positive ``min_partitions`` repartitions to it unconditionally).
+
+    One count decides: the output partitioning of the prepared physical
+    plan (exchanges in place, planned without running a job). An
+    upstream repartition, rebalance, keyed exchange, aggregate or
+    sort-merge join reports its width, and a coalesce, a shrink-to-1
+    repartition or a broadcast join over a 1-partition side reports 1.
+    A bare scan reports 0 (unknown); then the scan's file count stands
+    in, so a 1-file parquet fans out and a 100 TB scan does not. An
+    input with neither (an in-memory source) is left as it is.
     """
     if min_partitions == 0:
         return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if min_partitions:
-        # Caller pinned a target: repartition unconditionally (no probe).
-        return df.repartition(target)
-    # A repartition/rebalance already on the input's SPINE means an
-    # upstream stage (the entry's defensive _read_fanned, a caller's
-    # salted repartition) has fanned the data out — adding another
-    # exchange here would shuffle the batch a SECOND time for nothing.
-    # This double exchange was the round-4 mt_*/small-gate overhead
-    # doubling (VERDICT r4, next-round item #4): the inputFiles() probe
-    # below sees THROUGH a Repartition node to the 1-file scan and
-    # repartitioned again. Logical-plan string probe: no job, no
-    # plan→RDD translation. Guard rails (round-5 review):
-    #  * spine only — stop scanning at the first Join/Union; a
-    #    repartition on a broadcast dimension side says nothing about
-    #    THIS input's parallelism;
-    #  * width-checked — 'Repartition N, true' with N < target is an
-    #    explicit narrow fan (or a shrink-to-1) and must still fan out;
-    #    keyed/rebalance forms without a printed width default to the
-    #    session's shuffle partitions (≥ target in practice).
-    try:
-        plan = df._jdf.queryExecution().logical().toString()
-        for line in plan.splitlines():
-            if "Join" in line or "Union" in line:
-                break
-            if "RebalancePartitions" in line:
-                return df
-            m = _SHUFFLE_REPARTITION_RE.search(line)
-            if m and int(m.group(1)) >= target:
-                return df
-            if "RepartitionByExpression" in line:
-                m = _KEYED_REPARTITION_RE.search(line)
-                if m is None or int(m.group(1)) >= target:
-                    return df
-    except Exception:
-        pass  # plan introspection is best-effort; fall through to probes
-    # Default heuristic without converting the plan to an RDD (the old
-    # df.rdd.getNumPartitions() probe forced a plan→RDD translation per
-    # operator call): count the scan's input files. A small/compacted
-    # parquet source shows fewer files than cores → fan out. A 100 TB
-    # scan reports ≥ target files and this stays a no-op.
-    n_files = len(df.inputFiles())
-    if n_files == 0:
-        # Non-file source (Kafka/JDBC/in-memory): inputFiles() says
-        # nothing about parallelism, and unconditionally repartitioning
-        # would force a shuffle — and could SHRINK a many-partition
-        # source down to defaultParallelism. Fall back to the actual
-        # partition-count probe; these sources are rare on this operator
-        # so the one-off plan→RDD translation is acceptable here.
-        try:
-            if df.rdd.getNumPartitions() < target:
-                return df.repartition(target)
-        except Exception:
-            pass  # e.g. foreachBatch frames that refuse .rdd: leave as-is
-        return df
-    if n_files < target:
-        return df.repartition(target)
-    return df
+        return df.repartition(min_partitions)
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # AQE's initial plan, before any stage runs
+    n = plan.outputPartitioning().numPartitions() or len(df.inputFiles())
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(target) if 0 < n < target else df
 
 
 def _factory_key(encoder_factory, encoder_key=None):

@@ -75,8 +75,9 @@ def build_scaled_input() -> None:
     docs_dir = os.path.join(SCALED_DIR, "documents.parquet")
     shutil.rmtree(docs_dir, ignore_errors=True)
     os.makedirs(docs_dir)
-    # ≥32 files TOTAL even at small REPLICAS: with fewer files than
-    # the larger parallelism level, _ensure_parallelism would add a
+    # ≥32 files TOTAL even at small REPLICAS: a bare scan's partition
+    # count is its file count to _ensure_parallelism, so with fewer
+    # files than the larger parallelism level it would add a
     # round-robin shuffle at local[32] but not at local[8] —
     # asymmetric overhead inside the very ratio being measured.
     shards = max(1, -(-32 // REPLICAS))  # ceil

@@ -209,3 +209,12 @@ class TestPlanProbeGuardRails:
         df = spark.range(100).coalesce(1)
         out = _ensure_parallelism(df, None)
         assert out.rdd.getNumPartitions() == par
+
+    def test_sort_merge_join_reads_its_planned_width(self, spark):
+        """A sort-merge join's count is read with its exchanges planned
+        (hash-partitioned to the shuffle width), so unequal sides
+        neither fan out again nor fail planning."""
+        fact = spark.range(100).coalesce(1)
+        joined = fact.join(spark.range(100).repartition(3).hint("merge"), "id")
+        assert "SortMergeJoin" in joined._jdf.queryExecution().executedPlan().toString()
+        assert _ensure_parallelism(joined, None) is joined

@@ -181,11 +181,11 @@ class TestStarConnectedComponents:
     the collected union-find route on every graph shape, including long
     chains, where star needs O(log n) rounds."""
 
-    def _assign(self, spark, pairs, algorithm, **kw):
+    def _assign(self, spark, pairs, **kw):
         from gliner_spark.operators.canonicalize import connected_components
 
         edges = spark.createDataFrame(pairs, "src long, dst long")
-        out = connected_components(edges, algorithm=algorithm, **kw)
+        out = connected_components(edges, **kw)
         return {r.node: r.component for r in out.collect()}
 
     def _reference(self, pairs):
@@ -222,15 +222,18 @@ class TestStarConnectedComponents:
         ]
         for pairs in cases:
             exp = self._reference(pairs)
-            got = self._assign(spark, pairs, "star")
+            got = self._assign(spark, pairs, max_driver_edges=-1)
             assert got == exp, pairs
 
     def test_all_algorithms_agree(self, spark):
+        """-1 forces the star route, a huge threshold the driver route;
+        both agree, on an empty edge set too."""
         pairs = [(i, i + 1) for i in range(12)] + [(100, 101), (101, 102), (200, 200)]
         exp = self._reference(pairs)
-        for algo in ("driver", "star"):
-            got = self._assign(spark, pairs, algo, max_driver_edges=0 if algo != "driver" else 10**9)
-            assert got == exp, algo
+        for max_driver_edges in (-1, 10**9):
+            got = self._assign(spark, pairs, max_driver_edges=max_driver_edges)
+            assert got == exp, max_driver_edges
+            assert self._assign(spark, [], max_driver_edges=max_driver_edges) == {}
 
     def test_star_keeps_only_its_result_cached(self, spark):
         """A star call leaves at most one persistent RDD behind, the one
@@ -240,7 +243,7 @@ class TestStarConnectedComponents:
         pairs = [(i, i + 1) for i in range(10)]
         for _ in range(2):
             before = jsc.getPersistentRDDs().size()
-            got = self._assign(spark, pairs, "star")
+            got = self._assign(spark, pairs, max_driver_edges=-1)
             assert jsc.getPersistentRDDs().size() - before <= 1
             assert got == self._reference(pairs)
 
@@ -257,13 +260,8 @@ class TestStarConnectedComponents:
 
         monkeypatch.setattr(cz, "_cc_star", spy)
         pairs = [(0, 1), (1, 2)]
-        got = self._assign(spark, pairs, "auto", max_driver_edges=0)
+        got = self._assign(spark, pairs, max_driver_edges=0)
         assert called.get("star") and got == self._reference(pairs)
-
-    def test_unknown_algorithm(self, spark):
-        for algo in ("graphx", "propagation"):
-            with pytest.raises(ValueError, match="algorithm"):
-                self._assign(spark, [(0, 1)], algo)
 
 
 class TestCcNonConvergence:
@@ -278,7 +276,7 @@ class TestCcNonConvergence:
             [(i, i + 1) for i in range(200)], "src long, dst long"
         )
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(edges, algorithm="star", max_iter=1).collect()
+            connected_components(edges, max_iter=1, max_driver_edges=-1).collect()
 
     def test_converged_chain_still_correct(self, spark):
         from gliner_spark.operators.canonicalize import connected_components
@@ -286,6 +284,6 @@ class TestCcNonConvergence:
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(200)], "src long, dst long"
         )
-        out = connected_components(edges, algorithm="star")
+        out = connected_components(edges, max_driver_edges=-1)
         comps = {r.node: r.component for r in out.collect()}
         assert set(comps.values()) == {0} and len(comps) == 201
